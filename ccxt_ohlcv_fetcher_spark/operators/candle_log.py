@@ -25,16 +25,23 @@ File pruning comes from per-file min/max stats recorded in the
 manifest (`SnapshotStore(stats_cols=...)`), replacing `CandleDataset`'s
 Hive `dt=` directory pruning: partition values live as ordinary data
 columns, and the log's stats answer "which files can hold symbol S
-after T" with zero storage I/O. `resume_offset` is answered from the
-manifest alone when file stats are conclusive — the 100 TB analog of
-the reference's indexed `ORDER BY timestamp DESC LIMIT 1` (`:86-91`).
+after T" with zero storage I/O.
+
+Layout invariant: every data file holds exactly ONE (exchange, symbol,
+timeframe) key. Appends and `compact()` both place rows with
+`repartitionById` on a dense index of the keys they already know
+(`_cluster`), never with a sampled range, so no file straddles two
+keys. Each file's stats then have min == max on the partition columns,
+and `resume_offset` is answered from the manifest alone — the 100 TB
+analog of the reference's indexed `ORDER BY timestamp DESC LIMIT 1`
+(`:86-91`).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ccxt_ohlcv_fetcher_spark.operators.ingest import (
@@ -48,6 +55,22 @@ from ccxt_ohlcv_fetcher_spark.operators.snapshots import (
 
 KEY_COLS = (*PARTITION_COLS, "timestamp")
 STATS_COLS = KEY_COLS
+
+
+def _key_index(keys: list[tuple]) -> Column:
+    """Each row's position in ``keys``, a list of (exchange, symbol,
+    timeframe) tuples: one literal map lookup, no join. A row whose key
+    is missing from the list gets NULL."""
+    if not keys:
+        return F.lit(0)
+
+    def key(values) -> Column:
+        return F.struct(
+            *(F.lit(v).cast("string").alias(c) for c, v in zip(PARTITION_COLS, values))
+        )
+
+    index = F.create_map(*(x for i, k in enumerate(keys) for x in (key(k), F.lit(i))))
+    return index[F.struct(*PARTITION_COLS)]
 
 
 class SnapshotCandleDataset:
@@ -128,8 +151,10 @@ class SnapshotCandleDataset:
 
         Answered from manifest stats ALONE when every candidate file is
         single-keyed (its min==max on all three partition cols) — zero
-        data I/O, the log is the index. Falls back to a pruned data scan
-        when some candidate file mixes keys and stats are inconclusive.
+        data I/O, the log is the index. Appends and compactions keep
+        that invariant (`_cluster`). The pruned data scan is the
+        fallback for files that break it: deletion vectors, files
+        written by an older layout or by a raw `SnapshotStore` call.
         """
         if self.store.latest_version() == 0:
             return None
@@ -202,15 +227,17 @@ class SnapshotCandleDataset:
         ]
 
     @staticmethod
-    def _cluster(df: DataFrame, n_keys: int) -> DataFrame:
-        """Stage layout: ~one sorted file per (exchange,symbol,timeframe)
-        group, so manifest stats are single-keyed (stats-only resume)
-        and row-group min/max stay selective (R13 explicit order,
-        reference `:70`). At 100 TB the same expression scales the file
-        count with the batch's key count, not the cluster's task count.
-        """
-        return df.repartitionByRange(
-            max(1, n_keys), *KEY_COLS
+    def _cluster(df: DataFrame, keys: list[tuple]) -> DataFrame:
+        """Stage layout: exactly one sorted file per (exchange, symbol,
+        timeframe) key in ``keys``, which must list every key in ``df``.
+        Rows go to partition ``_key_index`` by id, so placement is exact
+        and costs no sampling job; a range partitioner would sample
+        bounds that can fall inside a key and mix two keys in one file.
+        Single-keyed files keep manifest stats conclusive (stats-only
+        resume) and the sort keeps row-group min/max selective (R13
+        explicit order, reference `:70`)."""
+        return df.repartitionById(
+            max(1, len(keys)), _key_index(keys)
         ).sortWithinPartitions(*KEY_COLS)
 
     def append_idempotent(
@@ -249,7 +276,8 @@ class SnapshotCandleDataset:
         n = deduped.count()
         if n == 0:
             return 0
-        files = store._stage(self._cluster(deduped, len(ranges)))
+        keys = [tuple(r[c][0] for c in PARTITION_COLS) for r in ranges]
+        files = store._stage(self._cluster(deduped, keys))
         staged_schema = store._pending_schema
         for _ in range(max_retries):
             head = store.latest_version()
@@ -290,7 +318,7 @@ class SnapshotCandleDataset:
                         if n_reduced == 0:
                             return 0  # every row already won elsewhere
                         deduped, n = reduced, n_reduced
-                        files = store._stage(self._cluster(deduped, len(ranges)))
+                        files = store._stage(self._cluster(deduped, keys))
                 base = head
             merged = store.manifest(base)["files"] + files
             if store._try_commit(base, merged, "append", txn=txn):
@@ -327,15 +355,17 @@ class SnapshotCandleDataset:
 
     def compact(
         self,
-        files_per_key_hint: int = 1,
         when_dv_ratio_above: float | None = None,
         when_files_per_key_above: int | None = None,
     ) -> int | None:
-        """Clustered rewrite: one atomic 'compact' commit that
-        range-partitions the whole snapshot on (exchange, symbol,
-        timeframe, timestamp) and sorts within files — each output file
-        then owns a disjoint key+time slab, so manifest stats prune
-        maximally and `resume_offset` stays stats-only. Incremental
+        """Clustered rewrite: one atomic 'compact' commit that writes
+        the whole snapshot as exactly one file per (exchange, symbol,
+        timeframe) key, sorted on timestamp (`_cluster`'s placement, with
+        the keys from one distinct-keys job). Manifest stats then prune
+        whole keys and `resume_offset` stays stats-only. A key that a
+        concurrent writer commits after that job lands in file 0: the
+        rows stay correct, but that file's stats stay inconclusive
+        until the next compaction. Incremental
         (tail-bucket-only) compaction composes by filtering first and
         committing the rewrite of just those files; whole-snapshot is
         the fixture-scale form.
@@ -370,15 +400,16 @@ class SnapshotCandleDataset:
             if not fired:
                 return None
         head = self.store.latest_version()
-        n_keys = max(
-            1,
-            self.store.read(version=head)
+        keys = [
+            tuple(r)
+            for r in self.store.read(version=head)
             .select(*PARTITION_COLS)
             .distinct()
-            .count(),
-        )
+            .collect()
+        ]
         return self.store.compact(
-            target_partitions=n_keys * files_per_key_hint,
+            target_partitions=max(1, len(keys)),
+            partition_id=_key_index(keys),
             order_by=list(KEY_COLS),
         )
 

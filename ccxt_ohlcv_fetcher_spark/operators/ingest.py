@@ -43,6 +43,7 @@ from ccxt_ohlcv_fetcher_spark.functions.timeframe import timeframe_interval_expr
 from ccxt_ohlcv_fetcher_spark.schemas import PRICE_TYPE
 
 PARTITION_COLS = ("exchange", "symbol", "timeframe")
+OHLCV_COLS = ("open", "high", "low", "close", "volume")
 
 # 2014-01-01T00:00:00Z, the reference's DEFAULT_SINCE (`:26`).
 DEFAULT_SINCE_MS = 1388534400000
@@ -63,17 +64,38 @@ def project_ohlcv_rows(
     """R8: positional 6-wide API rows -> named, typed, partition-tagged.
 
     Mirrors `:57-66` (positional unpack + int(ts) cast) plus the
-    partition columns that replace the per-file layout.
+    partition columns that replace the per-file layout. Prices are
+    coerced with ``float()``, so int-valued fields (``volume`` ``0``,
+    which some exchanges return) and ``None`` are accepted.
+
+    The page travels to the JVM as a ``pyarrow.Table``: Spark holds it
+    as Arrow batches in a JVM-side RDD, so every later scan of the
+    page (the append's key stats and anti-join) runs without a Python
+    worker. A list of tuples would become a pickled ``PythonRDD`` that
+    each scan re-runs in Python.
     """
-    df = spark.createDataFrame(
-        [tuple(r) for r in rows],
-        "timestamp long, open double, high double, low double, close double, volume double",
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) or [()] * 6
+    page = pa.table(
+        {
+            "timestamp": pa.array(
+                [None if t is None else int(t) for t in cols[0]], pa.int64()
+            ),
+            **{
+                name: pa.array(
+                    [None if v is None else float(v) for v in vals], pa.float64()
+                )
+                for name, vals in zip(OHLCV_COLS, cols[1:6])
+            },
+        }
     )
+    df = spark.createDataFrame(page)
     # one canonical storage type across every write path (paging ingest,
     # streaming sink, SQLite migration): DecimalType faithful to the
     # reference's lossless string-stored prices (:39-43). Mixed
     # double/decimal appends into one dataset would conflict on read.
-    for c in ("open", "high", "low", "close", "volume"):
+    for c in OHLCV_COLS:
         df = df.withColumn(c, F.col(c).cast(PRICE_TYPE))
     return (
         df.withColumn("exchange", F.lit(exchange))

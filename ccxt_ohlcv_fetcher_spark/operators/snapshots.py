@@ -62,7 +62,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -2991,6 +2991,7 @@ class SnapshotStore:
         order_by: list[str] | None = None,
         zorder_by: list[str] | None = None,
         when_dv_ratio_above: float | None = None,
+        partition_id: Column | None = None,
     ) -> int | None:
         """Rewrite the current snapshot's many small files into
         ``target_partitions`` files in ONE atomic commit (operation
@@ -3012,14 +3013,24 @@ class SnapshotStore:
         untouched — no version burn, nothing to vacuum). A triggered
         compact materializes every deletion vector (rewritten files
         drop their DV entries at commit), so the next ``dv_stats`` is
-        empty and read amplification resets to zero."""
+        empty and read amplification resets to zero.
+
+        ``partition_id``: an integer column naming each row's output
+        file (taken modulo ``target_partitions``; NULL goes to file 0).
+        Placement is exact, with no range sampling, so a caller that
+        numbers its keys densely gets one key per file; ``order_by``
+        then only sorts within each file."""
         if when_dv_ratio_above is not None:
             if self.dv_stats()["dv_ratio"] <= when_dv_ratio_above:
                 return None
         for _ in range(max_retries):
             base = self.latest_version()
             snapshot = self.read(version=base)
-            if order_by:
+            if partition_id is not None:
+                snapshot = snapshot.repartitionById(target_partitions, partition_id)
+                if order_by:
+                    snapshot = snapshot.sortWithinPartitions(*order_by)
+            elif order_by:
                 # clustered rewrite: range-partition + sort so each output
                 # file owns a disjoint key range — min/max footer stats then
                 # prune whole files on range predicates (OPTIMIZE ... ZORDER

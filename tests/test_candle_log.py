@@ -17,7 +17,10 @@ from pyspark.sql import functions as F
 from ccxt_ohlcv_fetcher_spark.operators.candle_log import (
     SnapshotCandleDataset,
 )
-from ccxt_ohlcv_fetcher_spark.operators.ingest import project_ohlcv_rows
+from ccxt_ohlcv_fetcher_spark.operators.ingest import (
+    PARTITION_COLS,
+    project_ohlcv_rows,
+)
 
 T0 = 1700000000 * 1000 - (1700000000 % 60) * 1000
 MIN = 60_000
@@ -147,19 +150,64 @@ def test_time_travel_and_retention(spark, ds):
     assert ds.read().count() == 4
 
 
-def test_compact_clusters_and_keeps_stats_pruning(spark, ds):
-    for lo in range(0, 12, 3):
-        ds.append_idempotent(batch(spark, lo, lo + 3))
-        ds.append_idempotent(batch(spark, lo, lo + 3, symbol="BTC/USD"))
+def _key_stats(ds) -> list[tuple]:
+    """The (exchange, symbol, timeframe) key of every head file, asserting
+    that each file holds exactly one key (min == max on the key stats)."""
+    m = ds.store.manifest()
+    keys = []
+    for f in m["files"]:
+        fs = m["stats"][f]
+        assert all(fs[c][0] == fs[c][1] for c in PARTITION_COLS), (f, fs)
+        keys.append(tuple(fs[c][0] for c in PARTITION_COLS))
+    return keys
+
+
+def test_compact_clusters_and_keeps_stats_pruning(spark, ds, monkeypatch):
+    """compact() writes exactly one file per (exchange, symbol, timeframe)
+    key. Uneven row counts are the shape where a sampled range
+    partitioner puts bounds inside the big key and merges small keys
+    into one file; resume_offset must stay stats-only afterwards."""
+    sizes = {"BTC/USD": 40, "ETH/USD": 5, "LTC/USD": 3, "XRP/USD": 7}
+    for lo in range(0, 40, 5):
+        for sym, n in sizes.items():
+            if lo < n:
+                ds.append_idempotent(batch(spark, lo, min(lo + 5, n), symbol=sym))
     n_files_before = len(ds.store.manifest()["files"])
     ds.compact()
-    m = ds.store.manifest()
-    assert len(m["files"]) < n_files_before
-    assert ds.read().count() == 24
+    keys = _key_stats(ds)
+    assert len(keys) == len(set(keys)) == len(sizes) < n_files_before
+    assert ds.read().count() == sum(sizes.values())
     # compacted files carry fresh stats; per-symbol pruning still works
-    files = ds.store.pruned_files({"symbol": ("BTCUSD", "BTCUSD")})
-    assert 0 < len(files) < len(m["files"]) or len(m["files"]) == 1
-    assert ds.resume_offset("e", "BTC/USD", "1m") == T0 + 11 * MIN
+    assert len(ds.store.pruned_files({"symbol": ("BTCUSD", "BTCUSD")})) == 1
+
+    def boom(*a, **k):  # pragma: no cover - must not be reached
+        raise AssertionError("resume_offset touched data files")
+
+    monkeypatch.setattr(ds.spark.read, "parquet", boom)
+    for sym, n in sizes.items():
+        assert ds.resume_offset("e", sym, "1m") == T0 + (n - 1) * MIN
+
+
+def test_multi_key_append_stages_one_file_per_key(spark, ds):
+    """One append whose batch holds 3 symbols (the streaming sink's
+    micro-batch shape) stages exactly one file per key, also when the
+    anti-join drops part of the batch."""
+    first = batch(spark, 0, 20, "BTC/USD").unionByName(
+        batch(spark, 0, 3, "ETH/USD")
+    ).unionByName(batch(spark, 0, 8, "XRP/USD"))
+    assert ds.append_idempotent(first) == 31
+    assert sorted(_key_stats(ds)) == [
+        ("e", "BTCUSD", "1m"), ("e", "ETHUSD", "1m"), ("e", "XRPUSD", "1m")
+    ]
+    second = batch(spark, 15, 25, "BTC/USD").unionByName(
+        batch(spark, 2, 5, "ETH/USD")
+    ).unionByName(batch(spark, 0, 8, "XRP/USD"))
+    assert ds.append_idempotent(second) == 5 + 2
+    assert sorted(_key_stats(ds)) == [
+        ("e", "BTCUSD", "1m"), ("e", "BTCUSD", "1m"),
+        ("e", "ETHUSD", "1m"), ("e", "ETHUSD", "1m"), ("e", "XRPUSD", "1m"),
+    ]
+    assert ds.read().count() == 25 + 5 + 8
 
 
 def test_random_interleaved_candle_writers_never_lose_or_dup(spark, tmp_path):
@@ -359,3 +407,49 @@ def test_retention_neutralizes_stale_pending_mapping(spark, ds):
     assert not m.get("column_mapping")
     assert not m.get("column_mapping_burned")
     assert ds.read().count() == 4
+
+
+# Spark jobs of one poll cycle on a compacted table: resume offset, one
+# page through the idempotent append, and a tail read. Today's count; a
+# change that lowers it lowers this ceiling, one that raises it must say
+# why in CHANGES.md.
+POLL_CYCLE_JOB_CEILING = 9
+
+
+def test_poll_cycle_job_budget(spark, ds):
+    """One poll cycle's job count, harvested from the JVM status store
+    under its own job group, stays within the committed ceiling."""
+    from ccxt_ohlcv_fetcher_spark.sources.paging import (
+        FixturePagingSource,
+        ingest_candles,
+    )
+
+    # uneven history per symbol: a sampled range partitioner would split
+    # BTC and merge XRP with LTC, and XRP's resume would scan data
+    pages = {"BTC/USD": 3, "ETH/USD": 1, "LTC/USD": 1, "XRP/USD": 2}
+    page, n_rows = 50, 200
+    now = T0 + n_rows * MIN
+    sources = {s: FixturePagingSource(grid(n_rows), page_size=page) for s in pages}
+    for s, n in pages.items():
+        ingest_candles(spark, sources[s], ds, "e", s, "1m", now_ms=now, max_pages=n)
+    ds.compact()
+
+    sc = spark.sparkContext
+    group = "test_poll_cycle_job_budget"
+    sc.setJobGroup(group, "one poll cycle")
+    try:
+        stats = ingest_candles(
+            spark, sources["XRP/USD"], ds, "e", "XRP/USD", "1m", now_ms=now, max_pages=1
+        )
+        last = ds.resume_offset("e", "XRP/USD", "1m")
+        tail = ds.read("e", "XRP/USD", "1m", since_ms=last - 9 * MIN).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (stats.rows_appended, last, tail) == (page - 1, T0 + (3 * page - 3) * MIN, 10)
+
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)  # a Scala Seq of JobData
+    groups = (jobs.apply(i).jobGroup() for i in range(jobs.size()))
+    n_jobs = sum(1 for g in groups if g.isDefined() and g.get() == group)
+    assert 0 < n_jobs <= POLL_CYCLE_JOB_CEILING

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ccxt_ohlcv_fetcher_spark.operators.ingest import (
+    OHLCV_COLS,
     CandleDataset,
     drop_incomplete_tail,
     drop_overlap,
@@ -54,6 +55,23 @@ def test_project_ohlcv_rows_named_and_typed(spark):
     row = df.orderBy("timestamp").first()
     assert row["symbol"] == "XRPUSD"  # '/' stripped (gen_db_name :135)
     assert row["timestamp"] == T0 and isinstance(row["timestamp"], int)
+
+
+def test_project_ohlcv_rows_int_and_none_fields_match_float_input(spark):
+    """Some exchanges return int-valued fields (``volume`` 0) or None.
+    They project to the same decimal values and dtypes as float input.
+    The page is an Arrow-backed JVM relation: scanning it runs no
+    Python worker, so no ``PythonRDD`` sits in its lineage."""
+    ints = [[T0, 100, 101, 99, 100, 0], [T0 + MIN, 101, None, 100, 101, 7]]
+    floats = [[r[0], *(None if v is None else float(v) for v in r[1:])] for r in ints]
+    got = project_ohlcv_rows(spark, ints, "e", "S/X", "1m")
+    want = project_ohlcv_rows(spark, floats, "e", "S/X", "1m")
+    assert got.dtypes == want.dtypes
+    assert {dict(got.dtypes)[c] for c in OHLCV_COLS} == {"decimal(38,12)"}
+    rows = got.orderBy("timestamp").collect()
+    assert rows == want.orderBy("timestamp").collect()
+    assert rows[0]["volume"] == 0 and rows[1]["high"] is None
+    assert "PythonRDD" not in got._jdf.queryExecution().toRdd().toDebugString()
 
 
 def test_overlap_drop(spark):
