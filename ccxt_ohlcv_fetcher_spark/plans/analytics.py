@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ccxt_ohlcv_fetcher_spark.functions.hashing import md5_long, md5_long_sql
 from ccxt_ohlcv_fetcher_spark.operators.text import words
 from ccxt_ohlcv_fetcher_spark.plans.registry import (
+    artifact_dir,
     dec,
     ms,
     register,
@@ -1216,9 +1217,7 @@ def events_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state_path = _IVM_MEMO.get(sf_dir)
     if state_path is None:
-        import tempfile
-
-        base = tempfile.mkdtemp(prefix="ivm_")
+        base = artifact_dir("ivm_")
         src = SnapshotStore(spark, base + "/src")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
@@ -1288,9 +1287,7 @@ def events_incremental_agg_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state_path = _IVM_MEMO.get(("cdc", sf_dir))
     if state_path is None:
-        import tempfile
-
-        base = tempfile.mkdtemp(prefix="ivm_cdc_")
+        base = artifact_dir("ivm_cdc_")
         src = SnapshotStore(spark, base + "/src")
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
@@ -1362,9 +1359,7 @@ def revenue_join_view_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state_path = _IVM_MEMO.get(("joincdc", sf_dir))
     if state_path is None:
-        import tempfile
-
-        base = tempfile.mkdtemp(prefix="ivm_join_")
+        base = artifact_dir("ivm_join_")
         fact = SnapshotStore(spark, base + "/fact", stats_cols=["okey"])
         dim = SnapshotStore(spark, base + "/dim")
         li = load_table(spark, sf_dir, "lineitem").select(

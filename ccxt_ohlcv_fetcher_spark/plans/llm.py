@@ -55,7 +55,11 @@ from ccxt_ohlcv_fetcher_spark.operators.text import (
     word_ngrams,
     words,
 )
-from ccxt_ohlcv_fetcher_spark.plans.registry import register, session_key
+from ccxt_ohlcv_fetcher_spark.plans.registry import (
+    artifact_dir,
+    register,
+    session_key,
+)
 from ccxt_ohlcv_fetcher_spark.sources.tables import load_table
 
 # --- shared DuckDB SQL fragments -----------------------------------------
@@ -406,17 +410,13 @@ def _incremental_dedup_index(spark: SparkSession, sf_dir: str) -> str:
     key = os.path.abspath(sf_dir) + "|" + ";".join(parts)
     path = _MINHASH_INDEX_MEMO.get(key)
     if path is None or not os.path.isdir(os.path.join(path, "_manifests")):
-        import tempfile
-
         # r13: the store lives under a per-PROCESS tempdir (the
         # _persisted_ann_index discipline) instead of a fixed /tmp path
         # keyed on the testdata fingerprint — a fresh bench/oracle run
         # always pays the cold build; the content fingerprint in the key
         # still guards against serving a stale corpus within a process.
         digest = hashlib.md5(key.encode()).hexdigest()[:10]
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="minhash_index_"), f"docs_{digest}"
-        )
+        path = os.path.join(artifact_dir("minhash_index_"), f"docs_{digest}")
         store = _minhash_index_store(spark, path)
         if store.latest_version() == 0:
             docs = load_table(spark, sf_dir, "documents")
@@ -801,13 +801,11 @@ def _persisted_ann_index(spark: SparkSession, sf_dir: str) -> str:
     returned DataFrame)."""
     path = _ANN_INDEX_MEMO.get(sf_dir)
     if path is None:
-        import tempfile
-
         from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
             build_ann_index,
         )
 
-        path = tempfile.mkdtemp(prefix="ann_index_") + "/idx"
+        path = artifact_dir("ann_index_") + "/idx"
         build_ann_index(
             load_table(spark, sf_dir, "embeddings"), path, dim=64, n_planes=4
         )
@@ -3393,13 +3391,11 @@ def _persisted_opq_index(spark: SparkSession, sf_dir: str) -> str:
     dir."""
     path = _OPQ_INDEX_MEMO.get(sf_dir)
     if path is None:
-        import tempfile
-
         from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
             build_opq_index_logged,
         )
 
-        path = tempfile.mkdtemp(prefix="opq_index_") + "/idx"
+        path = artifact_dir("opq_index_") + "/idx"
         build_opq_index_logged(
             load_table(spark, sf_dir, "embeddings"), path,
             dim=64, m=8, n_codes=16, train_iters=3,

@@ -72,6 +72,26 @@ def session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
+_ARTIFACT_ROOT: str | None = None
+
+
+def artifact_dir(prefix: str) -> str:
+    """A fresh directory for a build-once artifact (a persisted index,
+    incremental-view state) under one per-process root, which an
+    ``atexit`` hook removes: the artifacts live exactly as long as the
+    in-process memos that point at them."""
+    global _ARTIFACT_ROOT
+    import tempfile
+
+    if _ARTIFACT_ROOT is None:
+        import atexit
+        import shutil
+
+        _ARTIFACT_ROOT = tempfile.mkdtemp(prefix="spark_graft_artifacts_")
+        atexit.register(shutil.rmtree, _ARTIFACT_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_ARTIFACT_ROOT)
+
+
 def dec(col: Column | str, scale: int = 6) -> Column:
     """Cast to exact decimal before aggregation (see module docstring)."""
     col = F.col(col) if isinstance(col, str) else col

@@ -52,10 +52,12 @@ WIDEN_KEYS: dict[str, tuple[str, ...]] = {
 # A/B was exactly this shape for the dim-sized tables)
 _WIDEN_MIN_ROWS = 1000
 
-# (path, mtime_ns, size) -> (n_rows, n_row_groups, total_bytes): parquet
-# FOOTER metadata only — never row data — so this is file-listing-cache
-# territory (Spark keeps the equivalent per session), not result caching
-_FOOTER_STATS: dict[tuple[str, int, int], tuple[int, int, int]] = {}
+# (path, ((part name, mtime_ns, size), ...)) -> (n_rows, n_row_groups,
+# total_bytes): parquet FOOTER metadata only — never row data — so this
+# is file-listing-cache territory (Spark keeps the equivalent per
+# session), not result caching. Keyed per part file: a part rewritten in
+# place leaves the directory's own mtime and size unchanged.
+_FOOTER_STATS: dict[tuple, tuple[int, int, int]] = {}
 
 
 def _parquet_footer_stats(path: str) -> tuple[int, int, int]:
@@ -67,11 +69,6 @@ def _parquet_footer_stats(path: str) -> tuple[int, int, int]:
 
     import pyarrow.parquet as pq
 
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    hit = _FOOTER_STATS.get(key)
-    if hit is not None:
-        return hit
     files = (
         sorted(
             os.path.join(path, f)
@@ -81,12 +78,23 @@ def _parquet_footer_stats(path: str) -> tuple[int, int, int]:
         if os.path.isdir(path)
         else [path]
     )
-    rows = groups = size = 0
+    stats = [os.stat(f) for f in files]
+    key = (
+        path,
+        tuple(
+            (os.path.basename(f), st.st_mtime_ns, st.st_size)
+            for f, st in zip(files, stats)
+        ),
+    )
+    hit = _FOOTER_STATS.get(key)
+    if hit is not None:
+        return hit
+    rows = groups = 0
     for f in files:
         meta = pq.ParquetFile(f).metadata
         rows += meta.num_rows
         groups += meta.num_row_groups
-        size += os.stat(f).st_size
+    size = sum(st.st_size for st in stats)
     _FOOTER_STATS[key] = (rows, groups, size)
     return rows, groups, size
 

@@ -6,6 +6,10 @@ Jaccard, exact-dedup semantics on crafted dups, multimodal plumbing
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2148,3 +2152,31 @@ def test_mutual_knn_graph_invariants(spark, sf_dir):
         na = math.sqrt(sum(float(x) ** 2 for x in va))
         nb = math.sqrt(sum(float(x) ** 2 for x in vb))
         assert abs(r["score"] - dot / (na * nb)) < 1e-9
+
+
+def test_index_tempdirs_removed_at_exit(sf_dir, tmp_path):
+    """A build-once index lives under the per-process artifact root,
+    which is removed when the process exits: nothing is left in TMPDIR."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    code = (
+        "from ccxt_ohlcv_fetcher_spark.session import get_spark\n"
+        "from ccxt_ohlcv_fetcher_spark.plans.llm import _persisted_ann_index\n"
+        "spark = get_spark('index-tmp', master='local[2]', shuffle_partitions=2)\n"
+        f"print(_persisted_ann_index(spark, {sf_dir!r}))\n"
+    )
+    env = dict(
+        os.environ, TMPDIR=str(tmp), PYTHONPATH=repo, SPARK_GRAFT_DRIVER_MEM="1g"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().startswith(str(tmp)), out.stdout
+    assert os.listdir(tmp) == []
