@@ -27,17 +27,13 @@ queries stay strategy-agnostic (their oracle checks values, not plans).
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ccxt_ohlcv_fetcher_spark.artifacts import artifact_dir, memo
 from ccxt_ohlcv_fetcher_spark.sources.tables import load_table
-
-# (session id, sf_dir, table, bucket col, n) -> catalog table name; the
-# build is an eager one-time write, so reuse within a session matters
-_MEMO: dict[tuple, str] = {}
 
 
 def bucketed_view(
@@ -46,7 +42,6 @@ def bucketed_view(
     table: str,
     bucket_col: str,
     n_buckets: int = 8,
-    base_dir: str = "/tmp/spark_graft_bucketed",
 ) -> DataFrame:
     """The fixture table as a catalog-registered BUCKETED external
     table (built on first use per session, reused after): returns
@@ -57,27 +52,22 @@ def bucketed_view(
     same murmur3-pmod routing as the bucket-id assignment, so each
     task holds exactly one bucket's rows and each bucket lands in ONE
     file — which is what lets Spark trust the ``sortBy`` order at scan
-    time and skip the join-side sort as well."""
-    key = (id(spark), sf_dir, table, bucket_col, n_buckets)
-    name = _MEMO.get(key)
-    if name is not None and spark.catalog.tableExists(name):
-        return spark.table(name)
-    digest = hashlib.md5(
-        f"{sf_dir}|{table}|{bucket_col}|{n_buckets}".encode()
-    ).hexdigest()[:10]
-    name = f"bkt_{table}_{digest}"
-    path = os.path.join(base_dir, name)
-    if spark.catalog.tableExists(name):
-        spark.sql(f"DROP TABLE {name}")
-    (
-        load_table(spark, sf_dir, table)
-        .repartition(n_buckets, F.col(bucket_col))
-        .write.format("parquet")
-        .mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(name)
-    )
-    _MEMO[key] = name
-    return spark.table(name)
+    time and skip the join-side sort as well. The table is named after
+    its directory, a session artifact on disk."""
+
+    def build() -> str:
+        path = artifact_dir(f"bkt_{table}_")
+        (
+            load_table(spark, sf_dir, table)
+            .repartition(n_buckets, F.col(bucket_col))
+            .write.format("parquet")
+            .mode("overwrite")
+            .option("path", path)
+            .bucketBy(n_buckets, bucket_col)
+            .sortBy(bucket_col)
+            .saveAsTable(os.path.basename(path))
+        )
+        return path
+
+    path = memo(spark, sf_dir, f"bucketed/{table}/{bucket_col}/{n_buckets}", build)
+    return spark.table(os.path.basename(path))

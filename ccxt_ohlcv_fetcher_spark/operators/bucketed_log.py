@@ -3,13 +3,13 @@
 verdict item 2).
 
 ``operators/bucketed.py`` demonstrates the layout through per-session
-catalog tables under /tmp — the zero-exchange plans are real but the
-artifact is ephemeral and ungoverned. This module puts the SAME layout
-on the snapshot log: every commit's data files are written through
-Spark's ``bucketBy`` writer (bucket id in the file name, Spark's
-murmur3-pmod routing), the bucket key + count live in the MANIFEST
-(``bucket_spec``, carried across versions like the schema), and reads
-resolve a snapshot-exact file set that Spark still recognizes as
+catalog tables over plain directories — the zero-exchange plans are
+real but the artifact is ephemeral and ungoverned. This module puts the
+SAME layout on the snapshot log: every commit's data files are written
+through Spark's ``bucketBy`` writer (bucket id in the file name,
+Spark's murmur3-pmod routing), the bucket key + count live in the
+MANIFEST (``bucket_spec``, carried across versions like the schema),
+and reads resolve a snapshot-exact file set that Spark still recognizes as
 hash-partitioned — so the shuffle-free sort-merge joins and per-key
 aggregations now come from a table with ACID commits, time travel,
 stats pruning, and retention.
@@ -49,6 +49,7 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ccxt_ohlcv_fetcher_spark.artifacts import artifact_dir, memo
 from ccxt_ohlcv_fetcher_spark.operators.snapshots import SnapshotStore
 
 #: Session-global LRU of registered per-version view tables (round-11
@@ -428,42 +429,31 @@ class BucketedSnapshotStore(SnapshotStore):
         return df
 
 
-# (abs sf_dir, table, col, n) -> store path; cross-checked against the
-# on-disk log so a cleaned /tmp or recycled session id rebuilds
-# (the partitioned.py memo lesson, ADVICE r9)
-_MEMO: dict[tuple, str] = {}
-
-
 def logged_bucketed_view(
     spark: SparkSession,
     sf_dir: str,
     table: str,
     bucket_col: str,
     n_buckets: int = 8,
-    base_dir: str = "/tmp/spark_graft_bucketed_log",
 ) -> DataFrame:
     """Build-once/query-many surface for the registry queries: the
     fixture table as a snapshot-LOGGED bucketed table (one initial
-    commit), read back snapshot-exact with the bucket layout intact."""
-    key = (os.path.abspath(sf_dir), table, bucket_col, n_buckets)
-    path = _MEMO.get(key)
-    if path is None or not os.path.isdir(os.path.join(path, "_manifests")):
-        digest = hashlib.md5("|".join(map(str, key)).encode()).hexdigest()[:10]
-        path = os.path.join(base_dir, f"{table}_{digest}")
-        store = BucketedSnapshotStore(
-            spark, path, bucket_col=bucket_col, n_buckets=n_buckets
-        )
-        # gate on a COMMITTED version, not directory existence: a
-        # builder that died between makedirs and the manifest CAS
-        # would otherwise poison the path forever (empty log, no
-        # bucket_spec). The txn watermark makes the build exactly-once
-        # even across CONCURRENT builders racing on the same path —
-        # the loser's append is skipped by the commit log itself.
-        if store.latest_version() == 0:
-            from ccxt_ohlcv_fetcher_spark.sources.tables import load_table
+    commit, a session artifact on disk), read back snapshot-exact with
+    the bucket layout intact."""
 
-            store.append(
-                load_table(spark, sf_dir, table), txn=("bucketed_build", 1)
-            )
-        _MEMO[key] = path
+    def build() -> str:
+        from ccxt_ohlcv_fetcher_spark.sources.tables import load_table
+
+        path = artifact_dir("bucketed_log_") + "/" + table
+        # the txn watermark makes the build exactly-once even across
+        # CONCURRENT builders of one store: the loser's append is
+        # skipped by the commit log itself
+        BucketedSnapshotStore(
+            spark, path, bucket_col=bucket_col, n_buckets=n_buckets
+        ).append(load_table(spark, sf_dir, table), txn=("bucketed_build", 1))
+        return path
+
+    path = memo(
+        spark, sf_dir, f"bucketed_log/{table}/{bucket_col}/{n_buckets}", build
+    )
     return BucketedSnapshotStore(spark, path).read_bucketed()

@@ -16,6 +16,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ccxt_ohlcv_fetcher_spark.session import scoped_conf
+
 PAGERANK_UNIT = 10**12  # fixed-point: 1.0 == 10^12
 
 # ~bytes per (long, long, long)-ish loop row; the estimate only has to
@@ -57,16 +59,11 @@ def loop_conf(
     if derived >= session:
         yield
         return
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", str(derived))
+    conf = {"spark.sql.shuffle.partitions": str(derived)}
     if aqe_off:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+        conf["spark.sql.adaptive.enabled"] = "false"
+    with scoped_conf(spark, conf):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(session))
-        if aqe_off:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
 def pagerank_prepare(

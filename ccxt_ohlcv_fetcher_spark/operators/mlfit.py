@@ -43,26 +43,16 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ccxt_ohlcv_fetcher_spark.session import scoped_conf
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _no_aqe(spark):
-    """Disable AQE for an IRLS iteration loop, restoring on exit.
-
-    Every Newton step is one single-stage aggregation collapsing to a
-    1-row result — there is nothing for adaptive re-optimization to
-    improve, but its per-job re-planning latency is paid on every
-    step (r12 measured solo at sf0.1: 20 iterations on the cached
-    3-column frame 7.4 s with AQE vs 4.8 s without; values are
-    identical either way — AQE never changes results)."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+# IRLS iteration loops run with AQE off. Every Newton step is one
+# single-stage aggregation collapsing to a 1-row result — there is
+# nothing for adaptive re-optimization to improve, but its per-job
+# re-planning latency is paid on every step (r12 measured solo at
+# sf0.1: 20 iterations on the cached 3-column frame 7.4 s with AQE vs
+# 4.8 s without; values are identical either way — AQE never changes
+# results).
+_IRLS_CONF = {"spark.sql.adaptive.enabled": "false"}
 
 
 def _collect_stats(df: DataFrame, aggs: list, who: str):
@@ -186,7 +176,7 @@ def logistic_irls(
     )
     n_iter, converged, log_lik, n_rows = 0, False, float("nan"), 0
     try:
-      with _no_aqe(df.sparkSession):
+      with scoped_conf(df.sparkSession, _IRLS_CONF):
         for n_iter in range(1, max_iter + 1):
             z = (
                 F.lit(beta[0])
@@ -355,7 +345,7 @@ def fit_glm(
     beta = np.zeros(k)
     feat = feat.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-      with _no_aqe(df.sparkSession):
+      with scoped_conf(df.sparkSession, _IRLS_CONF):
         if family == "poisson":
             # standard GLM warm start: intercept-only model, b0 = ln(ybar)
             # (one extra decimal-sum agg, saves ~half the Newton steps —

@@ -26,15 +26,10 @@ use DPP — the shape tests/test_partitioned_dpp.py pins.
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ccxt_ohlcv_fetcher_spark.artifacts import artifact_dir, memo
 from ccxt_ohlcv_fetcher_spark.sources.tables import load_table
-
-_MEMO: dict[tuple, tuple[str, str]] = {}
 
 # event_type -> funnel category; stored as dim DATA (not derivable at
 # plan time from the fact side)
@@ -48,35 +43,25 @@ CATEGORY_OF = {
 
 
 def partitioned_events_with_dim(
-    spark: SparkSession,
-    sf_dir: str,
-    base_dir: str = "/tmp/spark_graft_partitioned",
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(fact, dim): events rewritten once per session as a
     Hive-partitioned table (``partitionBy(event_type)``) plus a tiny
     materialized event_type->category dimension. Build-once/query-many
     like the other layout builders (bucketed/ANN indexes)."""
-    key = (id(spark), sf_dir)
-    paths = _MEMO.get(key)
-    if paths is not None and not all(
-        os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths
-    ):
-        # id(spark) can be REUSED after a session is gc'd, and /tmp can
-        # be cleaned mid-process — a memo hit is only valid if the
-        # layout is still on disk (bucketed.py guards its memo with
-        # catalog.tableExists; this is the parquet-path equivalent)
-        paths = None
-    if paths is None:
-        digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        fact_path = os.path.join(base_dir, f"events_{digest}")
-        dim_path = os.path.join(base_dir, f"event_dim_{digest}")
-        load_table(spark, sf_dir, "events").write.mode(
-            "overwrite"
-        ).partitionBy("event_type").parquet(fact_path)
+
+    def build() -> str:
+        base = artifact_dir("partitioned_")
+        load_table(spark, sf_dir, "events").write.partitionBy(
+            "event_type"
+        ).parquet(base + "/events_by_type")
         spark.createDataFrame(
             [(t, c) for t, c in sorted(CATEGORY_OF.items())],
             "event_type string, category string",
-        ).coalesce(1).write.mode("overwrite").parquet(dim_path)
-        paths = (fact_path, dim_path)
-        _MEMO[key] = paths
-    return spark.read.parquet(paths[0]), spark.read.parquet(paths[1])
+        ).coalesce(1).write.parquet(base + "/event_dim")
+        return base
+
+    base = memo(spark, sf_dir, "partitioned/events", build)
+    return spark.read.parquet(base + "/events_by_type"), spark.read.parquet(
+        base + "/event_dim"
+    )

@@ -18,12 +18,11 @@ from pyspark.sql import functions as F
 
 from ccxt_ohlcv_fetcher_spark.functions.hashing import md5_long, md5_long_sql
 from ccxt_ohlcv_fetcher_spark.operators.text import words
+from ccxt_ohlcv_fetcher_spark.artifacts import artifact_dir, memo
 from ccxt_ohlcv_fetcher_spark.plans.registry import (
-    artifact_dir,
     dec,
     ms,
     register,
-    session_key,
     sql_ms,
 )
 from ccxt_ohlcv_fetcher_spark.sources.tables import load_table
@@ -428,9 +427,6 @@ def copurchase_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _copurchase_stats(_copurchase_edges(spark, sf_dir), deg, tri)
 
 
-_COPURCHASE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _copurchase_edges_counted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -438,17 +434,19 @@ def _copurchase_edges_counted(
     containing both, filtered to >= _COPURCHASE_MIN_ORDERS): one
     basket shuffle + deterministic sorted-pair expansion.
 
-    Memoized per (session, sf_dir) as a localCheckpointed frame — FIVE
-    registered queries (graph stats, k-core, both pageranks,
-    association rules) consume exactly this subtree, and each
-    previously rebuilt the basket shuffle + pair expansion (or a
-    two-shuffle self-join) from the raw scan; the pair table is
-    immutable per fixture, so every consumer after the first pays only
-    its own join/iteration cost (registry builders may run eager jobs;
-    ROUND_NOTES)."""
-    key = (session_key(spark), sf_dir)
-    if key in _COPURCHASE_MEMO:
-        return _COPURCHASE_MEMO[key]
+    A session artifact, checkpointed — FIVE registered queries (graph
+    stats, k-core, both pageranks, association rules) consume exactly
+    this subtree, and each previously rebuilt the basket shuffle + pair
+    expansion (or a two-shuffle self-join) from the raw scan; the pair
+    table is immutable per source, so every consumer after the first
+    pays only its own join/iteration cost (registry builders may run
+    eager jobs; ROUND_NOTES)."""
+    return memo(
+        spark, sf_dir, "copurchase_edges", lambda: _copurchase_pairs(spark, sf_dir)
+    )
+
+
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -470,7 +468,7 @@ def _copurchase_edges_counted(
             )
         )
     )
-    edges = (
+    return (
         baskets.filter(F.size("parts") >= 2)
         .select(pair.alias("e"))
         .groupBy(F.col("e.pa").alias("pa"), F.col("e.pb").alias("pb"))
@@ -478,8 +476,6 @@ def _copurchase_edges_counted(
         .filter(F.col("n_ord") >= _COPURCHASE_MIN_ORDERS)
         .localCheckpoint()
     )
-    _COPURCHASE_MEMO[key] = edges
-    return edges
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1181,9 +1177,6 @@ def session_motif_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVM_MEMO: dict[str, str] = {}
-
-
 @register(
     "events_incremental_agg",
     oracle="""
@@ -1215,8 +1208,7 @@ def events_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ccxt_ohlcv_fetcher_spark.operators.snapshots import SnapshotStore
 
-    state_path = _IVM_MEMO.get(sf_dir)
-    if state_path is None:
+    def build() -> str:
         base = artifact_dir("ivm_")
         src = SnapshotStore(spark, base + "/src")
         ev = load_table(spark, sf_dir, "events").select(
@@ -1240,8 +1232,9 @@ def events_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(3):
             src.append(ev.filter(F.col("event_id") % 3 == i))
             view.refresh()
-        state_path = base + "/state"
-        _IVM_MEMO[sf_dir] = state_path
+        return base + "/state"
+
+    state_path = memo(spark, sf_dir, "ivm/events", build)
     return (
         SnapshotStore(spark, state_path)
         .read()
@@ -1285,8 +1278,7 @@ def events_incremental_agg_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ccxt_ohlcv_fetcher_spark.operators.snapshots import SnapshotStore
 
-    state_path = _IVM_MEMO.get(("cdc", sf_dir))
-    if state_path is None:
+    def build() -> str:
         base = artifact_dir("ivm_cdc_")
         src = SnapshotStore(spark, base + "/src")
         ev = load_table(spark, sf_dir, "events").select(
@@ -1311,8 +1303,9 @@ def events_incremental_agg_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         view.refresh()
         src.delete_where("event_type = 'error' AND value < 50")
         view.refresh()
-        state_path = base + "/state"
-        _IVM_MEMO[("cdc", sf_dir)] = state_path
+        return base + "/state"
+
+    state_path = memo(spark, sf_dir, "ivm/events_cdc", build)
     return (
         SnapshotStore(spark, state_path)
         .read()
@@ -1357,8 +1350,7 @@ def revenue_join_view_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ccxt_ohlcv_fetcher_spark.operators.snapshots import SnapshotStore
 
-    state_path = _IVM_MEMO.get(("joincdc", sf_dir))
-    if state_path is None:
+    def build() -> str:
         base = artifact_dir("ivm_join_")
         fact = SnapshotStore(spark, base + "/fact", stats_cols=["okey"])
         dim = SnapshotStore(spark, base + "/dim")
@@ -1391,8 +1383,9 @@ def revenue_join_view_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         view.refresh()  # A0 * dB
         fact.delete_where("quantity > 45")
         view.refresh()  # signed retraction through the join
-        state_path = base + "/state"
-        _IVM_MEMO[("joincdc", sf_dir)] = state_path
+        return base + "/state"
+
+    state_path = memo(spark, sf_dir, "ivm/revenue_join_cdc", build)
     return (
         SnapshotStore(spark, state_path)
         .read()

@@ -55,11 +55,8 @@ from ccxt_ohlcv_fetcher_spark.operators.text import (
     word_ngrams,
     words,
 )
-from ccxt_ohlcv_fetcher_spark.plans.registry import (
-    artifact_dir,
-    register,
-    session_key,
-)
+from ccxt_ohlcv_fetcher_spark.artifacts import artifact_dir, memo
+from ccxt_ohlcv_fetcher_spark.plans.registry import register
 from ccxt_ohlcv_fetcher_spark.sources.tables import load_table
 
 # --- shared DuckDB SQL fragments -----------------------------------------
@@ -121,20 +118,18 @@ def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the documents table's distinct (doc_id, 3-gram shingle hash) rows —
 # the inverted-index input SEVEN registry queries start from
 # (jaccard/containment/capped pairs, minhash signatures/candidates,
-# boilerplate, dup components). Memoized per (session, sf_dir) as a
-# localCheckpointed frame (the _CC_MEMO pattern): the explode+distinct
-# shuffle runs once per session instead of once per query execution.
-_SHINGLE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# boilerplate, dup components). A session artifact (artifacts.memo),
+# checkpointed: the explode+distinct shuffle runs once per session
+# instead of once per query execution.
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_key(spark), sf_dir)
-    if key not in _SHINGLE_MEMO:
-        docs = load_table(spark, sf_dir, "documents")
-        _SHINGLE_MEMO[key] = shingle_sets(
-            docs, "text", "doc_id", n=3
-        ).localCheckpoint()
-    return _SHINGLE_MEMO[key]
+    return memo(
+        spark,
+        sf_dir,
+        "shingles",
+        lambda: shingle_sets(
+            load_table(spark, sf_dir, "documents"), "text", "doc_id", n=3
+        ).localCheckpoint(),
+    )
 
 
 def _doc_shingles_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -374,68 +369,35 @@ def minhash_candidate_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# build-once memo for the logged incremental-dedup index (the
-# logged_bucketed_view pattern): (abs sf_dir) -> store path, cross-
-# checked against the on-disk log; the txn watermark makes the build
-# exactly-once even across concurrent builders.
-_MINHASH_INDEX_MEMO: dict[str, str] = {}
-
-
+# the logged incremental-dedup index, a session artifact on disk; the
+# txn watermark makes the build exactly-once even across concurrent
+# builders of one store
 def _incremental_dedup_index(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import os
-
     from ccxt_ohlcv_fetcher_spark.operators.dedup import (
-        _minhash_index_store,
         build_minhash_index_logged,
     )
 
-    # fold a source-content fingerprint (mtime/size of the documents
-    # parquet) into the cache key: keyed on path alone, regenerating
-    # fixture data at the same path would silently serve candidates
-    # from the stale corpus index while the oracle recomputes fresh
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    parts = []
-    for p in (
-        sorted(
-            os.path.join(src, f)
-            for f in os.listdir(src)
-            if f.endswith(".parquet")
+    def build() -> str:
+        path = artifact_dir("minhash_index_") + "/docs"
+        corpus = load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % 10 < 8
         )
-        if os.path.isdir(src)
-        else [src]
-    ):
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}:{st.st_mtime_ns}:{st.st_size}")
-    key = os.path.abspath(sf_dir) + "|" + ";".join(parts)
-    path = _MINHASH_INDEX_MEMO.get(key)
-    if path is None or not os.path.isdir(os.path.join(path, "_manifests")):
-        # r13: the store lives under a per-PROCESS tempdir (the
-        # _persisted_ann_index discipline) instead of a fixed /tmp path
-        # keyed on the testdata fingerprint — a fresh bench/oracle run
-        # always pays the cold build; the content fingerprint in the key
-        # still guards against serving a stale corpus within a process.
-        digest = hashlib.md5(key.encode()).hexdigest()[:10]
-        path = os.path.join(artifact_dir("minhash_index_"), f"docs_{digest}")
-        store = _minhash_index_store(spark, path)
-        if store.latest_version() == 0:
-            docs = load_table(spark, sf_dir, "documents")
-            corpus = docs.filter(F.col("doc_id") % 10 < 8)
-            build_minhash_index_logged(
-                corpus,
-                path,
-                "text",
-                "doc_id",
-                k=8,
-                n=3,
-                bands=4,
-                txn=("minhash_index_build", 1),
-                shingles=_doc_shingles(spark, sf_dir).join(
-                    corpus.select("doc_id"), "doc_id", "left_semi"
-                ),
-            )
-        _MINHASH_INDEX_MEMO[key] = path
-    return path
+        build_minhash_index_logged(
+            corpus,
+            path,
+            "text",
+            "doc_id",
+            k=8,
+            n=3,
+            bands=4,
+            txn=("minhash_index_build", 1),
+            shingles=_doc_shingles(spark, sf_dir).join(
+                corpus.select("doc_id"), "doc_id", "left_semi"
+            ),
+        )
+        return path
+
+    return memo(spark, sf_dir, "minhash_index", build)
 
 
 @register(
@@ -582,9 +544,6 @@ def cosine_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("q_id", "vec_id", "score", F.col("rank").cast("int").alias("rank"))
 
 
-_KNN_GRAPH_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 @register(
     "embedding_mutual_knn",
     oracle=f"""
@@ -624,13 +583,16 @@ def embedding_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the exact N^2 score pass dominates (the HOF dot products, not the
     # shuffle — measured in PERFORMANCE.md §17) and its output is
-    # immutable per (session, sf_dir): memoize the checkpointed edge
+    # immutable per session and source: memoize the checkpointed edge
     # list like dup_doc_components does its converged labels
-    key = (session_key(spark), sf_dir)
-    if key not in _KNN_GRAPH_MEMO:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _KNN_GRAPH_MEMO[key] = knn_graph(emb, k=4, mutual=True)
-    return _KNN_GRAPH_MEMO[key]
+    return memo(
+        spark,
+        sf_dir,
+        "knn_graph",
+        lambda: knn_graph(
+            load_table(spark, sf_dir, "embeddings"), k=4, mutual=True
+        ),
+    )
 
 
 @register(
@@ -791,26 +753,22 @@ def ann_cosine_topk_lsh_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_INDEX_MEMO: dict[str, str] = {}
-
-
 def _persisted_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Build-once/query-many: the bucket-partitioned LSH index for this
-    fixture dir, built into a session temp dir on first use (registry
-    builders may run eager jobs; the driver contract only needs the
-    returned DataFrame)."""
-    path = _ANN_INDEX_MEMO.get(sf_dir)
-    if path is None:
-        from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
-            build_ann_index,
-        )
+    fixture dir, a session artifact on disk (registry builders may run
+    eager jobs; a query only needs the returned DataFrame)."""
+    from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
+        build_ann_index,
+    )
 
+    def build() -> str:
         path = artifact_dir("ann_index_") + "/idx"
         build_ann_index(
             load_table(spark, sf_dir, "embeddings"), path, dim=64, n_planes=4
         )
-        _ANN_INDEX_MEMO[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, sf_dir, "ann_index", build)
 
 
 @register(
@@ -889,28 +847,22 @@ def ann_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEED_MEMO: dict[tuple[str, int], list[list[float]]] = {}
-
-
 def _embedding_seeds(spark: SparkSession, sf_dir: str, n: int) -> list[list[float]]:
     """Memoized lowest-id seed vectors for the untrained ANN tiers.
 
     The IVF / PQ / IVF-PQ builders all derive their layout from the
     SAME first-n embeddings; without the memo each builder re-runs the
     TakeOrdered seed scan — ~1 s of the IVF-PQ query's driver-visible
-    cold time at sf0.1 (round-5 perf item 3). The fixtures are
-    immutable per sf_dir, so (sf_dir, n) keys the cache; registry
-    builders are allowed eager jobs (ROUND_NOTES)."""
+    cold time at sf0.1 (round-5 perf item 3). A session artifact per
+    n; registry builders are allowed eager jobs (ROUND_NOTES)."""
     from ccxt_ohlcv_fetcher_spark.operators.similarity import collect_seed_vectors
 
-    key = (sf_dir, n)
-    if key not in _SEED_MEMO:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _SEED_MEMO[key] = collect_seed_vectors(emb, n)
-    return _SEED_MEMO[key]
-
-
-_CC_MEMO: dict[tuple[str, str], DataFrame] = {}
+    return memo(
+        spark,
+        sf_dir,
+        f"seeds/{n}",
+        lambda: collect_seed_vectors(load_table(spark, sf_dir, "embeddings"), n),
+    )
 
 
 @register(
@@ -966,56 +918,50 @@ def dup_doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # building this DataFrame RUNS the iterative CC loop (driver-side
     # convergence counters), so `dup_component_sizes` calling through
     # here would pay the whole closure twice per bench/driver session.
-    # The converged labels are immutable per (session, sf_dir) — memoize
-    # them (registry builders may run eager jobs; ROUND_NOTES).
-    key = (session_key(spark), sf_dir)
-    if key not in _CC_MEMO:
-        docs = load_table(spark, sf_dir, "documents")
-        _CC_MEMO[key] = connected_components(
-            docs.select("doc_id"),
+    # The converged labels are a session artifact (registry builders
+    # may run eager jobs; ROUND_NOTES).
+    return memo(
+        spark,
+        sf_dir,
+        "dup_components",
+        lambda: connected_components(
+            load_table(spark, sf_dir, "documents").select("doc_id"),
             _jaccard02_edges(spark, sf_dir),
             id_col="doc_id", src="id_a", dst="id_b",
-        )
-    return _CC_MEMO[key]
+        ),
+    )
 
 
 # the Jaccard>=0.2 near-dup edge list (id pairs only) — the shared
 # upstream of the component family (dup_doc_components,
-# dup_component_sizes, incremental_components). Memoized per
-# (session, sf_dir) as a localCheckpointed frame, same rationale as
-# _doc_shingles: the inverted-index self-join runs once per session
-# instead of once per consuming execution. jaccard_dup_pairs (whose
-# RESULT is this pair list, with scores) deliberately does NOT read
-# the memo — query results are never cached, only shared upstream
-# artifacts.
-_EDGE02_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# dup_component_sizes, incremental_components). A session artifact,
+# checkpointed, same rationale as _doc_shingles: the inverted-index
+# self-join runs once per session instead of once per consuming
+# execution. jaccard_dup_pairs (whose RESULT is this pair list, with
+# scores) deliberately does NOT read the memo — query results are
+# never cached, only shared upstream artifacts.
 def _jaccard02_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_key(spark), sf_dir)
-    if key not in _EDGE02_MEMO:
-        docs = load_table(spark, sf_dir, "documents")
-        _EDGE02_MEMO[key] = (
-            ngram_jaccard_pairs(
-                docs, "text", "doc_id", n=3, threshold=0.2,
-                shingles=_doc_shingles(spark, sf_dir),
-            )
-            .select("id_a", "id_b")
-            .localCheckpoint()
+    return memo(
+        spark,
+        sf_dir,
+        "jaccard_edges",
+        lambda: ngram_jaccard_pairs(
+            load_table(spark, sf_dir, "documents"),
+            "text", "doc_id", n=3, threshold=0.2,
+            shingles=_doc_shingles(spark, sf_dir),
         )
-    return _EDGE02_MEMO[key]
+        .select("id_a", "id_b")
+        .localCheckpoint(),
+    )
 
 
 # the STANDING corpus assignment of incremental_components: labels of
-# the doc_id%10<8 epoch, computed once per (session, sf_dir). This is
-# the operator's own semantics — the standing assignment is the
-# maintained artifact a continuous-crawl pipeline persists (the batch
-# FOLD is the steady-state cost, measured per execution below);
-# rebuilding the corpus epoch per bench pass would time the one-off
-# bootstrap, not the operator.
-_PREV_CC_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# the doc_id%10<8 epoch, a session artifact. This is the operator's own
+# semantics — the standing assignment is the maintained artifact a
+# continuous-crawl pipeline persists (the batch FOLD is the
+# steady-state cost, measured per execution below); rebuilding the
+# corpus epoch per bench pass would time the one-off bootstrap, not the
+# operator.
 @register(
     "incremental_components",
     oracle=f"""
@@ -1090,15 +1036,17 @@ def incremental_components_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # any exact CC yields the identical min-label assignment, so the
     # choice is free (chain-shaped graphs still want it: the operator
     # keeps the flag).
-    key = (session_key(spark), sf_dir)
-    if key not in _PREV_CC_MEMO:
-        _PREV_CC_MEMO[key] = connected_components(
+    prev = memo(
+        spark,
+        sf_dir,
+        "corpus_components",
+        lambda: connected_components(
             docs.filter(in_corpus("doc_id")).select("doc_id"),
             edges.filter(in_corpus("id_a") & in_corpus("id_b")),
             id_col="doc_id", src="id_a", dst="id_b",
             pointer_jumping=False,
-        ).localCheckpoint()
-    prev = _PREV_CC_MEMO[key]
+        ).localCheckpoint(),
+    )
     # the batch's candidate edges: every pair TOUCHING a batch doc
     batch_edges = edges.filter(
         ~(in_corpus("id_a") & in_corpus("id_b"))
@@ -1790,21 +1738,21 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRIGRAM_PROFILE_K = 64  # top trigrams kept per language profile
 
 
-_TRIGRAM_PROF_MEMO: dict[tuple[str, str], DataFrame] = {}
-# collected (prof_map, norms) driver copy for the mapInPandas scorer —
-# langs x K entries, the bounded codebook-sync pattern
-_TRIGRAM_PROF_ROWS_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _trigram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained per-language top-K trigram profile + norm — a
-    train-once artifact (the kmeans/BPE/PCA memo pattern): the training
-    pass is a full corpus explode + groupBy, while the profile itself
-    is tiny (langs x K rows); memoized per (session, sf_dir) so every
-    execution after the first pays only the classification pass."""
-    key = (session_key(spark), sf_dir)
-    if key in _TRIGRAM_PROF_MEMO:
-        return _TRIGRAM_PROF_MEMO[key]
+    train-once session artifact (the BPE/PCA memo pattern): the
+    training pass is a full corpus explode + groupBy, while the profile
+    itself is tiny (langs x K rows), so every execution after the first
+    pays only the classification pass."""
+    return memo(
+        spark,
+        sf_dir,
+        "trigram_profile",
+        lambda: _train_trigram_profile(spark, sf_dir),
+    )
+
+
+def _train_trigram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1816,7 +1764,7 @@ def _trigram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # profile + its norm in ONE subtree (norm as a same-partition window
     # sum after the top-K cut) so the corpus-wide trigram count runs
     # once, not once per downstream consumer
-    prof = (
+    return (
         tg.groupBy("lang_p", "trigram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("rk", F.row_number().over(wk))
@@ -1832,9 +1780,6 @@ def _trigram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lang_p", "trigram", "cnt", "norm")
         .localCheckpoint()
     )
-    _TRIGRAM_PROF_MEMO[key] = prof
-    return prof
-
 
 
 @register(
@@ -1906,20 +1851,22 @@ def lang_id_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     # bounded driver sync (langs x K rows), memoized like the profile
-    key = (session_key(spark), sf_dir)
-    cached = _TRIGRAM_PROF_ROWS_MEMO.get(key)
-    if cached is None:
-        rows = _trigram_profile(spark, sf_dir).collect()
+    def collect_profile() -> tuple[dict, dict]:
         prof_map: dict = {}
         norms: dict = {}
-        for r in rows:
+        for r in _trigram_profile(spark, sf_dir).collect():
             prof_map.setdefault(r["trigram"], []).append(
                 (r["lang_p"], r["cnt"])
             )
             norms[r["lang_p"]] = r["norm"]
-        cached = (prof_map, norms)
-        _TRIGRAM_PROF_ROWS_MEMO[key] = cached
-    prof_map, norms = cached
+        return prof_map, norms
+
+    prof_map, norms = memo(
+        spark,
+        sf_dir,
+        "trigram_profile/rows",
+        collect_profile,
+    )
     # re.ASCII: the training pass (JVM regexp_replace '\\s+') and the
     # DuckDB oracle both use ASCII \s — Python's Unicode \s would
     # collapse U+00A0/U+2028 the profile was trained WITH, silently
@@ -3032,9 +2979,6 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 @register(
     "doc_bpe_tokens",
     oracle=None,  # data-dependent iterative training: rows-only; the
@@ -3062,14 +3006,16 @@ def doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    key = (session_key(spark), sf_dir)
-    if key not in _BPE_MEMO:
+
+    def train() -> DataFrame:
         _, vocab = train_bpe(word_freq_table(docs), n_merges=24)
-        _BPE_MEMO[key] = vocab.localCheckpoint()
+        return vocab.localCheckpoint()
+
+    vocab = memo(spark, sf_dir, "bpe", train)
     # oov="chars": tokenizing the TRAINING corpus has no OOV word by
     # construction, so the char fallback is provably identical to the
     # greedy serve path and keeps this plan Python-free
-    return bpe_tokenize_docs(docs, _BPE_MEMO[key], oov="chars")
+    return bpe_tokenize_docs(docs, vocab, oov="chars")
 
 
 @register(
@@ -3099,13 +3045,15 @@ def doc_bpe_oov_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    key = (session_key(spark), sf_dir, "oov")
-    if key not in _BPE_MEMO:
-        train = docs.filter(F.col("doc_id") % 2 == 0)
-        _, vocab = train_bpe(word_freq_table(train), n_merges=24)
-        _BPE_MEMO[key] = vocab.localCheckpoint()
+
+    def train() -> DataFrame:
+        even = docs.filter(F.col("doc_id") % 2 == 0)
+        _, vocab = train_bpe(word_freq_table(even), n_merges=24)
+        return vocab.localCheckpoint()
+
+    vocab = memo(spark, sf_dir, "bpe/oov", train)
     serve = docs.filter(F.col("doc_id") % 2 == 1)
-    return bpe_tokenize_docs(serve, _BPE_MEMO[key], oov="greedy")
+    return bpe_tokenize_docs(serve, vocab, oov="greedy")
 
 
 @register(
@@ -3160,9 +3108,6 @@ def embedding_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return covariance_from_moments(gram_moments(emb))
 
 
-_PCA_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 @register(
     "embedding_pca_project",
     oracle=None,  # eigendecomposition is not SQL-expressible: rows-only;
@@ -3187,10 +3132,9 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (session_key(spark), sf_dir)
-    if key not in _PCA_MEMO:
-        _PCA_MEMO[key] = pca_components(emb, dim=64, k=4)
-    comps, _, mean = _PCA_MEMO[key]
+    comps, _, mean = memo(
+        spark, sf_dir, "pca/4", lambda: pca_components(emb, dim=64, k=4)
+    )
     return pca_project(emb, comps, mean)
 
 
@@ -3305,9 +3249,6 @@ def doc_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OPQ_MEMO: dict[tuple[str, str], list] = {}
-
-
 def _opq_training(spark: SparkSession, sf_dir: str):
     """Memoized OPQ training for this (session, fixture): balanced
     rotation, Arrow-matmul-rotated corpus (checkpointed), trained
@@ -3324,14 +3265,14 @@ def _opq_training(spark: SparkSession, sf_dir: str):
         train_pq_codebooks,
     )
 
-    key = (session_key(spark), sf_dir)
-    if key not in _OPQ_MEMO:
+    def train() -> tuple:
         emb = load_table(spark, sf_dir, "embeddings")
         comps, _mean = opq_balanced_rotation(emb, dim=64, m=8)
         rot = rotate_partial(emb, comps, [0.0] * 64).localCheckpoint()
         cbs = train_pq_codebooks(rot, dim=64, m=8, n_codes=16, n_iter=3)
-        _OPQ_MEMO[key] = (comps, rot, cbs)
-    return _OPQ_MEMO[key]
+        return comps, rot, cbs
+
+    return memo(spark, sf_dir, "opq_training", train)
 
 
 def _opq_rotate(emb: DataFrame, comps: list[list[float]]) -> DataFrame:
@@ -3382,27 +3323,24 @@ def ann_cosine_topk_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OPQ_INDEX_MEMO: dict[str, str] = {}
-
-
 def _persisted_opq_index(spark: SparkSession, sf_dir: str) -> str:
     """Build-once/query-many: the snapshot-logged OPQ index (rotated +
     coded rows on the commit log, frozen meta sidecar) for this fixture
-    dir."""
-    path = _OPQ_INDEX_MEMO.get(sf_dir)
-    if path is None:
-        from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
-            build_opq_index_logged,
-        )
+    dir, a session artifact on disk."""
+    from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
+        build_opq_index_logged,
+    )
 
+    def build() -> str:
         path = artifact_dir("opq_index_") + "/idx"
         build_opq_index_logged(
             load_table(spark, sf_dir, "embeddings"), path,
             dim=64, m=8, n_codes=16, train_iters=3,
             trained=_opq_training(spark, sf_dir),
         )
-        _OPQ_INDEX_MEMO[sf_dir] = path
-    return path
+        return path
+
+    return memo(spark, sf_dir, "opq_index", build)
 
 
 @register(

@@ -28,6 +28,8 @@ registry pass is 212 MB, against 217 MB with 100 entries
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -78,3 +80,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set runtime SQL confs for a block. On exit each key gets back its
+    raw prior value verbatim, or is unset again if it was unset (so it
+    keeps following Spark's default, not a frozen copy of it)."""
+    prior = spark.conf.getAll
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k in conf:
+            if k in prior:
+                spark.conf.set(k, prior[k])
+            else:
+                spark.conf.unset(k)

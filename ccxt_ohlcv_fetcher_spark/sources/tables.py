@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ccxt_ohlcv_fetcher_spark.artifacts import fingerprint
 from ccxt_ohlcv_fetcher_spark.schemas import FIXTURE_SCHEMAS, TABLE_NAMES
 
 
@@ -52,11 +53,11 @@ WIDEN_KEYS: dict[str, tuple[str, ...]] = {
 # A/B was exactly this shape for the dim-sized tables)
 _WIDEN_MIN_ROWS = 1000
 
-# (path, ((part name, mtime_ns, size), ...)) -> (n_rows, n_row_groups,
-# total_bytes): parquet FOOTER metadata only — never row data — so this
-# is file-listing-cache territory (Spark keeps the equivalent per
-# session), not result caching. Keyed per part file: a part rewritten in
-# place leaves the directory's own mtime and size unchanged.
+# artifacts.fingerprint(path) -> (n_rows, n_row_groups, total_bytes):
+# parquet FOOTER metadata only — never row data — so this is
+# file-listing-cache territory (Spark keeps the equivalent per session),
+# not result caching. The fingerprint is per part file, so a part
+# rewritten in place is re-read.
 _FOOTER_STATS: dict[tuple, tuple[int, int, int]] = {}
 
 
@@ -69,34 +70,18 @@ def _parquet_footer_stats(path: str) -> tuple[int, int, int]:
 
     import pyarrow.parquet as pq
 
-    files = (
-        sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-        if os.path.isdir(path)
-        else [path]
-    )
-    stats = [os.stat(f) for f in files]
-    key = (
-        path,
-        tuple(
-            (os.path.basename(f), st.st_mtime_ns, st.st_size)
-            for f, st in zip(files, stats)
-        ),
-    )
+    key = fingerprint(path)
     hit = _FOOTER_STATS.get(key)
     if hit is not None:
         return hit
+    root, parts = key
     rows = groups = 0
-    for f in files:
-        meta = pq.ParquetFile(f).metadata
+    for rel, _mtime, _size in parts:
+        meta = pq.ParquetFile(os.path.normpath(os.path.join(root, rel))).metadata
         rows += meta.num_rows
         groups += meta.num_row_groups
-    size = sum(st.st_size for st in stats)
-    _FOOTER_STATS[key] = (rows, groups, size)
-    return rows, groups, size
+    _FOOTER_STATS[key] = (rows, groups, sum(size for _rel, _mtime, size in parts))
+    return _FOOTER_STATS[key]
 
 
 def _size_to_bytes(v: str) -> int:

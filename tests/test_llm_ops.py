@@ -6,6 +6,7 @@ Jaccard, exact-dedup semantics on crafted dups, multimodal plumbing
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -2078,40 +2079,50 @@ def test_incremental_components_equal_full_recompute(spark):
     assert comp2[30] == 1  # untouched components keep stable labels
 
 
-def test_incremental_index_cache_keys_on_source_content(spark, tmp_path):
-    """ADVICE r11: the /tmp-persisted incremental-dedup index was keyed
-    on the fixture PATH alone, so regenerating data at the same path
-    silently served candidates from the stale corpus index. The cache
-    key now folds in the documents parquet's mtime/size — rewriting the
-    source yields a DIFFERENT index path (and thus a fresh build)."""
-    import shutil
+@pytest.mark.parametrize(
+    "builder",
+    [
+        "_incremental_dedup_index",
+        "_persisted_ann_index",
+        "_persisted_opq_index",
+        "_embedding_seeds",
+    ],
+)
+def test_incremental_index_cache_keys_on_source_content(
+    spark, sf_dir, tmp_path, builder
+):
+    """A build-once artifact is keyed on its source's content, not on
+    the fixture path: regenerating the data at the SAME path yields a
+    fresh build (a new index path, new seed vectors), never the
+    artifact of the stale corpus. No memo is cleared by hand."""
     import time
 
-    from ccxt_ohlcv_fetcher_spark.plans.llm import _incremental_dedup_index
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
+    from ccxt_ohlcv_fetcher_spark.plans import llm
+
+    table, id_col = (
+        ("documents", "doc_id")
+        if builder == "_incremental_dedup_index"
+        else ("embeddings", "vec_id")
+    )
+    rows = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
     sf = tmp_path / "sf"
     sf.mkdir()
-    docs = spark.createDataFrame(
-        [
-            (i, f"doc number {i} with some shared words " + "x " * (i % 3))
-            for i in range(40)
-        ],
-        "doc_id long, text string",
-    )
-    docs.coalesce(1).write.parquet(str(sf / "documents.parquet"))
-    p1 = _incremental_dedup_index(spark, str(sf))
-    # regenerate the fixture at the SAME path (different content)
-    shutil.rmtree(sf / "documents.parquet")
-    time.sleep(0.01)  # ensure a distinct mtime_ns even on coarse clocks
-    docs.filter("doc_id < 30").coalesce(1).write.parquet(
-        str(sf / "documents.parquet")
-    )
-    # drop the shingle memo like a fresh session would
-    from ccxt_ohlcv_fetcher_spark.plans import llm as _llm
+    out = str(sf / f"{table}.parquet")
 
-    _llm._SHINGLE_MEMO.clear()
-    p2 = _incremental_dedup_index(spark, str(sf))
-    assert p1 != p2
+    def build():
+        args = (16,) if builder == "_embedding_seeds" else ()
+        return getattr(llm, builder)(spark, str(sf), *args)
+
+    pq.write_table(rows, out)
+    first = build()
+    # regenerate the fixture at the SAME path (different content)
+    time.sleep(0.01)  # ensure a distinct mtime_ns even on coarse clocks
+    even = pc.equal(pc.bit_wise_and(rows[id_col], 1), 0)
+    pq.write_table(rows.filter(even), out)
+    assert build() != first
 
 
 def test_mutual_knn_graph_invariants(spark, sf_dir):
@@ -2155,16 +2166,32 @@ def test_mutual_knn_graph_invariants(spark, sf_dir):
 
 
 def test_index_tempdirs_removed_at_exit(sf_dir, tmp_path):
-    """A build-once index lives under the per-process artifact root,
-    which is removed when the process exits: nothing is left in TMPDIR."""
+    """Build-once indexes and layouts live under the per-process
+    artifact root in TMPDIR, which is removed when the process exits:
+    every file they read is under TMPDIR, and nothing is left there."""
+    from urllib.parse import urlparse
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     code = (
+        "import json\n"
         "from ccxt_ohlcv_fetcher_spark.session import get_spark\n"
         "from ccxt_ohlcv_fetcher_spark.plans.llm import _persisted_ann_index\n"
+        "from ccxt_ohlcv_fetcher_spark.operators.bucketed import bucketed_view\n"
+        "from ccxt_ohlcv_fetcher_spark.operators.bucketed_log import (\n"
+        "    logged_bucketed_view)\n"
+        "from ccxt_ohlcv_fetcher_spark.operators.partitioned import (\n"
+        "    partitioned_events_with_dim)\n"
         "spark = get_spark('index-tmp', master='local[2]', shuffle_partitions=2)\n"
-        f"print(_persisted_ann_index(spark, {sf_dir!r}))\n"
+        f"sf = {sf_dir!r}\n"
+        "frames = [\n"
+        "    bucketed_view(spark, sf, 'customer', 'c_custkey', 4),\n"
+        "    logged_bucketed_view(spark, sf, 'orders', 'o_custkey', 4),\n"
+        "    *partitioned_events_with_dim(spark, sf),\n"
+        "]\n"
+        "files = [f for df in frames for f in df.inputFiles()]\n"
+        "print(json.dumps([_persisted_ann_index(spark, sf), *files]))\n"
     )
     env = dict(
         os.environ, TMPDIR=str(tmp), PYTHONPATH=repo, SPARK_GRAFT_DRIVER_MEM="1g"
@@ -2178,5 +2205,8 @@ def test_index_tempdirs_removed_at_exit(sf_dir, tmp_path):
         timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    assert out.stdout.strip().startswith(str(tmp)), out.stdout
+    index, *files = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(files) >= 4, files
+    for path in [index, *(urlparse(f).path for f in files)]:
+        assert path.startswith(str(tmp)), path
     assert os.listdir(tmp) == []

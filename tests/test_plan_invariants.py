@@ -236,3 +236,53 @@ def test_footer_stats_see_part_rewritten_in_place(tmp_path):
     pq.write_table(pa.table({"x": list(range(3000))}), part)
     os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
     assert _parquet_footer_stats(str(d))[0] == 3000
+
+
+# eager jobs of the second build of each pipeline query in one session
+# (local[8], sf0.001), every build-once artifact served from the store.
+# The first build runs 4, 15, 5 and 19. What remains is per-execution
+# work the builders run eagerly (PageRank's prep and iterations among
+# it); the kNN graph query is all artifact.
+HIT_PATH_JOB_CEILINGS = {
+    "ann_cosine_topk_ivf": 2,
+    "dedup_incremental_minhash": 6,
+    "embedding_mutual_knn": 0,
+    "part_pagerank": 15,
+}
+
+
+def test_artifact_hits_rebuild_nothing(spark, sf_dir):
+    """A second build of each pipeline query in one session serves its
+    artifacts (seeds, shingles and the minhash index, the kNN graph,
+    the co-purchase edges) from the store: a fingerprint that changed
+    between calls would silently turn every hit into a rebuild."""
+    sc = spark.sparkContext
+    registry = load_all()
+    for name in PIPELINE_QUERIES:
+        registry[name].builder(spark, sf_dir)
+        group = f"test_artifact_hits_rebuild_nothing_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            registry[name].builder(spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs <= HIT_PATH_JOB_CEILINGS[name], (name, n_jobs)
+
+
+def test_loop_conf_restores_unset_keys(spark):
+    """A scoped conf restores each key's raw prior state: a key that was
+    unset before the scope is unset after it, not pinned to a value."""
+    from ccxt_ohlcv_fetcher_spark.operators.graph import loop_conf
+
+    key = "spark.sql.adaptive.enabled"
+    prior = spark.conf.getAll.get(key)
+    spark.conf.unset(key)
+    try:
+        with loop_conf(spark, 10, aqe_off=True):
+            assert spark.conf.get(key) == "false"
+        assert key not in spark.conf.getAll
+    finally:
+        if prior is not None:
+            spark.conf.set(key, prior)
