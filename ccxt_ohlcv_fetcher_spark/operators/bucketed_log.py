@@ -1,11 +1,11 @@
-"""Snapshot-logged BUCKETED tables: the write-once pre-shuffle of
-``operators/bucketed.py`` as a durable, governed artifact (round-9
-verdict item 2).
+"""Snapshot-logged BUCKETED tables: a write-once pre-shuffle as a
+durable, governed artifact (round-9 verdict item 2).
 
-``operators/bucketed.py`` demonstrates the layout through per-session
-catalog tables over plain directories — the zero-exchange plans are
-real but the artifact is ephemeral and ungoverned. This module puts the
-SAME layout on the snapshot log: every commit's data files are written
+Spark's ``bucketBy(n, col)`` hash-partitions rows at WRITE time, and a
+scan of a bucketed catalog table reports ``HashPartitioning(col, n)``,
+so joins and aggregations on the bucket key plan with no Exchange: the
+shuffle is paid once, at ingest, instead of per query. This module puts
+that layout on the snapshot log: every commit's data files are written
 through Spark's ``bucketBy`` writer (bucket id in the file name,
 Spark's murmur3-pmod routing), the bucket key + count live in the
 MANIFEST (``bucket_spec``, carried across versions like the schema),

@@ -57,6 +57,15 @@ KEY_COLS = (*PARTITION_COLS, "timestamp")
 STATS_COLS = KEY_COLS
 
 
+def _unpin(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``-ed frame: its logical
+    plan is the LogicalRDD over the checkpointed RDD. Through the
+    SparkContext, because ``RDD.unpersist`` logs a warning for every
+    locally checkpointed RDD, which would be one per append."""
+    rdd = df._jdf.queryExecution().logical().rdd()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+
+
 def _key_index(keys: list[tuple]) -> Column:
     """Each row's position in ``keys``, a list of (exchange, symbol,
     timeframe) tuples: one literal map lookup, no join. A row whose key
@@ -273,57 +282,67 @@ class SnapshotCandleDataset:
                 F.broadcast(existing), on=list(KEY_COLS), how="left_anti"
             ).select(*batch.columns)  # joins reorder; schema guard is exact
         deduped = deduped.localCheckpoint(eager=True)
-        n = deduped.count()
-        if n == 0:
-            return 0
-        keys = [tuple(r[c][0] for c in PARTITION_COLS) for r in ranges]
-        files = store._stage(self._cluster(deduped, keys))
-        staged_schema = store._pending_schema
-        for _ in range(max_retries):
-            head = store.latest_version()
-            if txn is not None:
-                last = store.manifest(head).get("txn", {}).get(txn[0])
-                if last is not None and txn[1] <= last:
-                    return 0
-            head_manifest = store.manifest(head)
-            head_schema = head_manifest.get("schema")
-            if head_schema is not None and head_schema != staged_schema:
-                raise CommitConflict(
-                    f"table schema changed concurrently: head has "
-                    f"{head_schema}, staged append has {staged_schema}"
-                )
-            if head != base:
-                # conflict resolution: keys committed since `base` may
-                # collide with ours — check ONLY the delta files
-                base_files = set(store.manifest(base)["files"])
-                delta = [f for f in head_manifest["files"] if f not in base_files]
-                if delta:
-                    # DV-aware for the same delete-then-refetch reason
-                    # as _existing_keys (a racing delete_where_dv may
-                    # vector rows out of the winner's files)
-                    delta_keys = self.store._read_files_live(
-                        delta, head_manifest
-                    ).select(*KEY_COLS)
-                    reduced = (
-                        deduped.join(
-                            F.broadcast(delta_keys),
-                            on=list(KEY_COLS),
-                            how="left_anti",
-                        )
-                        .select(*deduped.columns)
-                        .localCheckpoint(eager=True)
+        pins = [deduped]
+        try:
+            n = deduped.count()
+            if n == 0:
+                return 0
+            keys = [tuple(r[c][0] for c in PARTITION_COLS) for r in ranges]
+            files = store._stage(self._cluster(deduped, keys))
+            staged_schema = store._pending_schema
+            for _ in range(max_retries):
+                head = store.latest_version()
+                if txn is not None:
+                    last = store.manifest(head).get("txn", {}).get(txn[0])
+                    if last is not None and txn[1] <= last:
+                        return 0
+                head_manifest = store.manifest(head)
+                head_schema = head_manifest.get("schema")
+                if head_schema is not None and head_schema != staged_schema:
+                    raise CommitConflict(
+                        f"table schema changed concurrently: head has "
+                        f"{head_schema}, staged append has {staged_schema}"
                     )
-                    n_reduced = reduced.count()
-                    if n_reduced < n:
-                        if n_reduced == 0:
-                            return 0  # every row already won elsewhere
-                        deduped, n = reduced, n_reduced
-                        files = store._stage(self._cluster(deduped, keys))
-                base = head
-            merged = store.manifest(base)["files"] + files
-            if store._try_commit(base, merged, "append", txn=txn):
-                return n
-        raise CommitConflict(f"append lost the CAS race {max_retries} times")
+                if head != base:
+                    # conflict resolution: keys committed since `base` may
+                    # collide with ours — check ONLY the delta files
+                    base_files = set(store.manifest(base)["files"])
+                    delta = [f for f in head_manifest["files"] if f not in base_files]
+                    if delta:
+                        # DV-aware for the same delete-then-refetch reason
+                        # as _existing_keys (a racing delete_where_dv may
+                        # vector rows out of the winner's files)
+                        delta_keys = self.store._read_files_live(
+                            delta, head_manifest
+                        ).select(*KEY_COLS)
+                        reduced = (
+                            deduped.join(
+                                F.broadcast(delta_keys),
+                                on=list(KEY_COLS),
+                                how="left_anti",
+                            )
+                            .select(*deduped.columns)
+                            .localCheckpoint(eager=True)
+                        )
+                        pins.append(reduced)
+                        n_reduced = reduced.count()
+                        if n_reduced < n:
+                            if n_reduced == 0:
+                                return 0  # every row already won elsewhere
+                            deduped, n = reduced, n_reduced
+                            files = store._stage(self._cluster(deduped, keys))
+                    base = head
+                merged = store.manifest(base)["files"] + files
+                if store._try_commit(base, merged, "append", txn=txn):
+                    return n
+            raise CommitConflict(
+                f"append lost the CAS race {max_retries} times"
+            )
+        finally:
+            # the staged files are committed or abandoned: nothing reads
+            # the pinned batches any more
+            for df in pins:
+                _unpin(df)
 
     # --- maintenance ------------------------------------------------------
 

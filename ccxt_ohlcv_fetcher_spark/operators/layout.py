@@ -9,11 +9,11 @@ interleave of the quantized dimensions — the same technique Delta's
 OPTIMIZE ZORDER BY applies (public algorithm: interleave the bits of
 rank-normalized columns).
 
-Pure Spark implementation: per-column min/max (one tiny aggregate) ->
-linear quantization to ``bits``-wide ints -> bit interleave via a HOF
-over a literal bit-index sequence (no UDF) -> ``repartitionByRange``
-on the z-value + sort within partitions -> write. Everything stays in
-codegen; the only driver data is 2 scalars per dimension.
+Pure Spark implementation: per-column quantile quantization (one
+approx-percentile aggregate per dimension) -> bit interleave via a HOF
+over a literal bit-index sequence (no UDF). ``SnapshotStore.compact``
+range-partitions on the z-value and sorts within partitions. Everything
+stays in codegen; the only driver data is the quantile boundaries.
 """
 
 from __future__ import annotations
@@ -86,61 +86,16 @@ def rank_quantized(df: DataFrame, col: str, bits: int) -> Column:
     ).cast("bigint")
 
 
-def zorder_column(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 15,
-    quantize: str = "rank",
-    rank_bits: int = 6,
-) -> Column:
+def zorder_column(df: DataFrame, cols: list[str]) -> Column:
     """The Z-curve position column for ``cols`` over ``df``'s value
-    distribution — the quantization half of :func:`zorder_write`,
-    reusable by any clustered rewrite (SnapshotStore.compact's
-    ``zorder_by`` passes it straight to repartitionByRange)."""
-    if quantize == "rank":
-        qcols = [rank_quantized(df, c, rank_bits) for c in cols]
-        return zorder_value(
-            qcols,
-            [0.0] * len(cols),
-            [float((1 << rank_bits) - 1)] * len(cols),
-            bits=rank_bits,
-        )
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"_lo{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"_hi{i}") for i, c in enumerate(cols)],
-    ).collect()[0]
-    mins = [stats[f"_lo{i}"] for i in range(len(cols))]
-    maxs = [stats[f"_hi{i}"] for i in range(len(cols))]
-    return zorder_value(cols, mins, maxs, bits=bits)
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 15,
-    quantize: str = "rank",
-    rank_bits: int = 6,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered on the
-    Z-curve of ``cols``: range-partition on the z-value (equal-size
-    files along the curve) and sort within each file, so every file
-    covers a tight box in all dimensions and row-group stats prune box
-    queries. One extra shuffle vs a plain write — paid once at layout
-    time, saved on every subsequent multi-predicate scan.
-
-    ``quantize="rank"`` (default) interleaves quantile-bucket ids
-    (``rank_bits`` per dimension, see :func:`rank_quantized`) — robust
-    to skewed distributions. ``quantize="linear"`` interleaves min/max-
-    scaled values at ``bits`` per dimension — fine for uniform columns,
-    degenerate for heavy-tailed ones."""
-    z = zorder_column(df, cols, bits=bits, quantize=quantize, rank_bits=rank_bits)
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
+    distribution: quantile-bucket ids (6 bits per dimension, see
+    :func:`rank_quantized`) bit-interleaved by :func:`zorder_value`.
+    SnapshotStore.compact's ``zorder_by`` passes it straight to
+    repartitionByRange."""
+    bits = 6
+    return zorder_value(
+        [rank_quantized(df, c, bits) for c in cols],
+        [0.0] * len(cols),
+        [float((1 << bits) - 1)] * len(cols),
+        bits=bits,
     )

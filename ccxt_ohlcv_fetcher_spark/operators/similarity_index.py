@@ -20,17 +20,9 @@ At 100 TB: the index write is one shuffle on bucket; a query touches
 ``|probes| / 2^n_planes`` of the directories. Rebuild = rerun build
 (deterministic hyperplanes -> same layout).
 
-``build_ivfpq_index`` / ``query_ivfpq_index`` persist the IVF-PQ
-composition the same way (FAISS's on-disk IVFPQ layout): the corpus is
-written partitioned by Voronoi ``cell=`` with its PQ codes and
-reconstructed norms; centroids + codebooks live in a ``_meta`` sidecar
-(underscore-prefixed — invisible to the index scan's file listing). A
-query prunes to ``n_probe`` cell directories STATICALLY
-(PartitionFilters), and the ADC candidate scan reads ONLY
-(id, codes, rn) — parquet column pruning keeps the embedding column on
-disk until the final ``rerank*k`` shortlist re-reads it for exact
-scores. That is the full billion-scale serving story: directory
-pruning x column pruning x code-table scoring.
+``query_ann_index_scoreaware`` is the served probe (same rows as
+``query_ann_index``, fewer probed partitions); ``build_opq_index_logged``
+/ ``query_opq_index_logged`` persist the OPQ tier on a SnapshotStore.
 """
 
 from __future__ import annotations
@@ -38,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ccxt_ohlcv_fetcher_spark.functions.arrays import dot_product, l2_norm
+from ccxt_ohlcv_fetcher_spark.functions.arrays import dot_product
 from ccxt_ohlcv_fetcher_spark.operators.similarity import (
     _with_norm,
     plane_dots,
@@ -313,334 +305,6 @@ def query_ann_index_scoreaware(
     )
 
 
-# --- snapshot-logged LSH index: incremental append without rebuild ------
-
-
-def _index_store(spark: SparkSession, path: str):
-    from ccxt_ohlcv_fetcher_spark.operators.snapshots import SnapshotStore
-
-    return SnapshotStore(spark, path, stats_cols=["bucket"])
-
-
-def _bucketed(
-    corpus: DataFrame, dim: int, n_planes: int, id_col: str, vec_col: str
-) -> DataFrame:
-    indexed = sign_lsh_buckets(
-        _with_norm(corpus, vec_col, "norm"), vec_col, n_planes, dim
-    ).select(id_col, vec_col, "norm", "bucket")
-    # cluster by bucket so each file's manifest stats cover few buckets
-    # -> pruned_files answers the probe from the log alone
-    return indexed.repartitionByRange(
-        2**n_planes, "bucket"
-    ).sortWithinPartitions("bucket")
-
-
-def build_ann_index_logged(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    n_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """LSH index as a SnapshotStore table (manifest stats on
-    ``bucket``): the serving answer to "the index must survive ingest"
-    (VERDICT r5 item 6). Build = one overwrite commit; each incremental
-    batch is ONE atomic append commit (`append_ann_index_logged`) whose
-    files slot into the same bucket space — readers flip manifest
-    versions, never see a half-built index, and time travel pins any
-    published index version. Returns the committed version."""
-    store = _index_store(corpus.sparkSession, path)
-    return store.overwrite(_bucketed(corpus, dim, n_planes, id_col, vec_col))
-
-
-def append_ann_index_logged(
-    delta: DataFrame,
-    path: str,
-    dim: int,
-    n_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Incremental index maintenance: bucket the new vectors with the
-    SAME deterministic hyperplanes (salt-derived — append and rebuild
-    agree by construction, mirroring the reference's incremental-resume
-    spirit, ccxt-ohlcv-fetch.py:86-91) and commit them as one atomic
-    append. No existing file is read or rewritten."""
-    store = _index_store(delta.sparkSession, path)
-    return store.append(_bucketed(delta, dim, n_planes, id_col, vec_col))
-
-
-def query_ann_index_logged(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int,
-    dim: int,
-    n_planes: int = 4,
-    multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "q_id",
-    query_vec: str = "q_vec",
-    version: int | None = None,
-) -> DataFrame:
-    """Top-k against the logged index: the probe set prunes FILES via
-    manifest stats (zero listing/footer I/O), then the same exact
-    re-rank as `query_ann_index`. ``version=`` queries a pinned
-    historical index snapshot."""
-    import os as _os
-
-    q = _probed_queries(queries, dim, n_planes, multiprobe, query_vec)
-    # bounded collect; set() dedupes, so no distinct shuffle (r13)
-    probe_buckets = sorted(
-        {r["bucket"] for r in q.select("bucket").collect()}
-    )
-    store = _index_store(spark, path)
-    files: set[str] = set()
-    for b in probe_buckets:
-        files.update(store.pruned_files({"bucket": (b, b)}, version=version))
-    if not files:
-        index = store.read(version=version).limit(0)
-    else:
-        index = spark.read.parquet(
-            *[_os.path.join(path, f) for f in sorted(files)]
-        )
-    index = index.filter(F.col("bucket").isin(probe_buckets))
-    return _exact_topk(index, q, k, id_col, vec_col, query_id, query_vec)
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    n_cells: int = 16,
-    m: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_iters: int = 0,
-) -> int:
-    """Write the cell-partitioned IVF-PQ index; returns #cells written.
-
-    Deterministic lowest-id seeds for centroids and codebooks (same
-    rule as ``ivf_pq_cosine_topk``, so a rebuild reproduces the layout
-    bit-for-bit); ``train_iters`` routes codebooks through
-    ``train_pq_codebooks`` for id-biased corpora (see the clustered-
-    fixture recall pin). One shuffle on cell; the sidecar is one row.
-    """
-    from ccxt_ohlcv_fetcher_spark.operators.similarity import (
-        _codebook_row,
-        _pq_codes,
-        _pq_recon_norm,
-        _top_cells,
-        train_pq_codebooks,
-    )
-
-    assert dim % m == 0
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid2
-
-    sub = dim // m
-    spark = corpus.sparkSession
-    cseeds = (
-        corpus.orderBy(id_col).limit(n_cells).select(F.col(vec_col).alias("_c")).collect()
-    )
-    centroids = [list(map(float, r["_c"])) for r in cseeds]
-    if train_iters:
-        codebooks = train_pq_codebooks(
-            corpus, dim, m, n_codes, n_iter=train_iters,
-            corpus_id=id_col, vec_col=vec_col,
-        )
-    else:
-        pseeds = (
-            corpus.orderBy(id_col).limit(n_codes).select(F.col(vec_col).alias("_v")).collect()
-        )
-        codebooks = [
-            [[float(x) for x in r["_v"][j * sub : (j + 1) * sub]] for r in pseeds]
-            for j in range(m)
-        ]
-    cb_row = _codebook_row(spark, codebooks, centroids=centroids)
-    encoded = (
-        corpus.withColumn("_one", F.lit(1))
-        .join(F.broadcast(cb_row), "_one")
-        .withColumn("codes", _pq_codes(vec_col, sub))
-        .select(
-            id_col,
-            vec_col,
-            "codes",
-            _pq_recon_norm().alias("rn"),
-            _top_cells(vec_col, 1)[0].alias("cell"),
-        )
-    )
-    # REBUILD protection (ADVICE r9): mode("overwrite") wipes the whole
-    # index path — including the previous _meta — before the new one is
-    # staged, so a crash anywhere from here on used to permanently
-    # delete the only copy of the codebooks. Rename the old _meta aside
-    # to a SIBLING of the index dir (inside it would be wiped too),
-    # done IMMEDIATELY before the wipe — not at function entry — so
-    # concurrent readers keep a readable index through the (possibly
-    # long) seed-collection and codebook-training phases above. A crash
-    # mid-rebuild then always leaves a complete meta on disk
-    # (recoverable), never garbage at the read path.
-    target = path.rstrip("/") + "/_meta"
-    if _os.path.isdir(target):
-        _os.rename(
-            target,
-            path.rstrip("/") + f"._meta_old_{_uuid2.uuid4().hex[:12]}",
-        )
-    encoded.write.mode("overwrite").partitionBy("cell").parquet(path)
-    # stage + rename so _meta is never PARTIALLY present: a crash
-    # mid-write leaves only an ignored _meta_staging_* dir and readers
-    # fail loud on the missing _meta instead of decoding garbage (same
-    # fix class as the logged-OPQ sidecar; underscore prefix keeps the
-    # staging dir out of the data read's partition discovery)
-    tmp = path.rstrip("/") + f"/_meta_staging_{_uuid2.uuid4().hex[:12]}"
-    cb_row.write.mode("overwrite").parquet(tmp)
-    _os.rename(tmp, target)
-    # a successful build sweeps EVERY backup sibling — this run's and
-    # any stale ones a previously crashed rebuild left behind (each
-    # crash makes a fresh uuid-named backup; only success cleans up)
-    import glob as _glob
-
-    for stale in _glob.glob(path.rstrip("/") + "._meta_old_*"):
-        _shutil.rmtree(stale, ignore_errors=True)
-    return n_cells
-
-
-def append_ivfpq_index(
-    delta: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Incremental IVF-PQ maintenance (FAISS's train-once/add-forever
-    contract): encode the new vectors with the PERSISTED ``_meta``
-    codebooks + centroids — never retrain on append, or old and new
-    codes become incomparable — and land them in their home cell
-    directories. Queries over the grown index equal a full rebuild
-    bit-for-bit because codes, cells, and reconstructed norms all
-    derive from the frozen meta. Returns rows appended."""
-    from ccxt_ohlcv_fetcher_spark.operators.similarity import (
-        _pq_codes,
-        _pq_recon_norm,
-        _top_cells,
-    )
-
-    spark = delta.sparkSession
-    meta = spark.read.parquet(path.rstrip("/") + "/_meta")
-    mrow = meta.collect()[0]
-    sub = len(mrow["_cb"][0][0])
-    encoded = (
-        delta.withColumn("_one", F.lit(1))
-        .join(F.broadcast(meta), "_one")
-        .withColumn("codes", _pq_codes(vec_col, sub))
-        .select(
-            id_col,
-            vec_col,
-            "codes",
-            _pq_recon_norm().alias("rn"),
-            _top_cells(vec_col, 1)[0].alias("cell"),
-        )
-    )
-    n = encoded.count()
-    encoded.write.mode("append").partitionBy("cell").parquet(path)
-    return n
-
-
-def query_ivfpq_index(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int,
-    n_probe: int = 4,
-    rerank: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "q_id",
-    query_vec: str = "q_vec",
-) -> DataFrame:
-    """Top-k against the stored IVF-PQ index, bit-equal to the
-    in-memory ``ivf_pq_cosine_topk`` at the same parameters.
-
-    Probe cells become a STATIC ``cell IN (...)`` partition filter (a
-    tiny driver collect of |Q| * n_probe cell ids); the candidate scan
-    selects only (id, codes, rn) so parquet never materializes the
-    embedding column for non-shortlist rows; the exact re-rank re-reads
-    the probed cells' (id, vector) columns for ``rerank*k`` ids only.
-    """
-    from ccxt_ohlcv_fetcher_spark.operators.similarity import (
-        _pq_adc,
-        _pq_query_lut,
-        _top_cells,
-        _with_norm,
-    )
-
-    meta = spark.read.parquet(path.rstrip("/") + "/_meta")
-    mrow = meta.collect()[0]
-    m, sub = len(mrow["_cb"]), len(mrow["_cb"][0][0])
-    probes = (
-        _with_norm(queries, query_vec, "_qn")
-        .withColumn("_one", F.lit(1))
-        .join(F.broadcast(meta), "_one")
-        .select(
-            query_id,
-            "_qn",
-            _pq_query_lut(query_vec, sub).alias("_lut"),
-            F.explode(_top_cells(query_vec, n_probe)).alias("cell"),
-        )
-    )
-    # bounded collect; set() dedupes, so no distinct shuffle (r13)
-    cells = sorted({r["cell"] for r in probes.select("cell").collect()})
-    index = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin([int(c) for c in cells]))
-        .select(id_col, "codes", "rn", "cell")
-    )
-    scored = index.join(F.broadcast(probes), "cell").select(
-        query_id,
-        F.col(id_col),
-        (_pq_adc() / (F.col("rn") * F.col("_qn"))).alias("score"),
-    )
-
-    def topk(df: DataFrame, n: int) -> DataFrame:
-        item = F.struct((-F.col("score")).alias("neg"), F.col(id_col).alias("id"))
-        return (
-            df.groupBy(query_id)
-            .agg(F.slice(F.array_sort(F.collect_list(item)), 1, n).alias("_top"))
-            .select(query_id, F.posexplode("_top").alias("pos", "item"))
-            .select(
-                query_id,
-                F.col("item.id").alias(id_col),
-                (-F.col("item.neg")).alias("score"),
-                (F.col("pos") + 1).alias("rank"),
-            )
-        )
-
-    if not rerank:
-        return topk(scored, k)
-    shortlist = topk(scored, rerank * k).select(query_id, id_col)
-    vecs = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin([int(c) for c in cells]))
-        .select(id_col, vec_col)
-    )
-    exact = (
-        shortlist.join(vecs, id_col)
-        .join(F.broadcast(_with_norm(queries, query_vec, "_qn")), query_id)
-        .withColumn("_cn", l2_norm(vec_col))
-        .select(
-            query_id,
-            F.col(id_col),
-            (dot_product(vec_col, query_vec) / (F.col("_cn") * F.col("_qn"))).alias(
-                "score"
-            ),
-        )
-    )
-    return topk(exact, k)
-
-
 # --- snapshot-logged OPQ index: rotation + trained codes on the log ----
 
 
@@ -810,8 +474,8 @@ def build_opq_index_logged(
     PERFORMANCE.md §10), PQ codebooks TRAINED in rotated space, and the
     rotated+coded rows (id, vector, codes, rn, c0) committed atomically.
     The rotation matrix + codebooks — the frozen encode contract — ride
-    a version-stamped meta sidecar (the save_bpe pattern), so appends
-    and queries at any version reproduce the exact build-time encoding,
+    a version-stamped meta sidecar (the save_bpe pattern), so queries
+    at any version reproduce the exact build-time encoding,
     and a retrain is an atomic overwrite+sidecar swap with the old
     index still time-travelable. Returns the commit version.
 
@@ -859,31 +523,6 @@ def build_opq_index_logged(
         },
     )
     return version
-
-
-def append_opq_index_logged(
-    delta: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Incremental OPQ maintenance — FAISS's train-once/add-forever:
-    rotate + encode the new vectors with the PERSISTED meta (never
-    retrain on append, or old and new codes become incomparable) and
-    commit them as ONE atomic append. Queries over the grown index are
-    bit-equal to encoding the union under the same meta (pinned)."""
-    from ccxt_ohlcv_fetcher_spark.operators.embeddings import rotate_partial
-
-    spark = delta.sparkSession
-    store = _opq_store(spark, path)
-    meta = _load_opq_meta(path, store.latest_version(), store=store)
-    rot = rotate_partial(
-        delta, meta["comps"], [0.0] * meta["dim"],
-        id_col=id_col, vec_col=vec_col,
-    )
-    return store.append(
-        _opq_encode(rot, meta["codebooks"], meta["n_codes"], id_col, vec_col)
-    )
 
 
 def query_opq_index_logged(

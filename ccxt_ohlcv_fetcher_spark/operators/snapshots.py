@@ -3309,10 +3309,10 @@ def streaming_snapshot_sink(
     appends with ``txn=(app_id, batch_id)``, so a re-delivered
     micro-batch (at-least-once foreachBatch) is skipped by the commit
     log itself — no content-based dedup needed, and readers only ever
-    see whole committed batches (snapshot isolation). This is the
-    table-format complement to the anti-join sink in
-    streaming/candles.py: that one dedups by KEY (absorbs overlapping
-    re-fetches), this one dedups by BATCH (absorbs replays byte-free).
+    see whole committed batches (snapshot isolation). It dedups by
+    BATCH (absorbs replays byte-free); overlapping re-fetches of the
+    same KEY are the candle ingest's anti-join's job
+    (``SnapshotCandleDataset.append_idempotent``).
 
     ``on_commit(version)`` fires after each batch that actually
     committed (skipped replays don't fire it) — the hook that keeps

@@ -3346,8 +3346,8 @@ def _persisted_opq_index(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "ann_opq_persisted_topk",
     oracle=None,  # approximate by construction; bit-equality to the
-    # in-memory pq_cosine_topk over the same frozen meta, append ==
-    # rebuild, and compaction invariance are pinned in
+    # in-memory pq_cosine_topk over the same frozen meta, compaction
+    # invariance and time travel are pinned in
     # tests/test_embeddings.py::test_opq_logged_index_*
     doc="ANN top-k against the PERSISTED snapshot-logged OPQ index "
     "(op E35 serving path; round-7 verdict item 4): the measured "
@@ -3358,9 +3358,8 @@ def _persisted_opq_index(spark: SparkSession, sf_dir: str) -> str:
     "version-stamped meta sidecar. Serving: raw queries rotate via the "
     "plan-literal fold (codegen, Python-free plan), ADC reads only "
     "(id, codes, rn) columns, exact re-rank re-reads rerank*k stored "
-    "vectors. Appends encode with the FROZEN meta (train-once/"
-    "add-forever), so append == rebuild bit-for-bit; compaction "
-    "restores file locality without changing a single result row.",
+    "vectors. Compaction restores file locality without changing a "
+    "single result row.",
     tags=("E35",),
 )
 def ann_opq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

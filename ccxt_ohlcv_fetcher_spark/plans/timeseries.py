@@ -315,7 +315,7 @@ def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Sliding windows, batch form (op E32s): 2h windows sliding 1h — "
     "each event lands in exactly two overlapping buckets. Same window() "
-    "definition Structured Streaming uses (streaming/candles.py).",
+    "definition Structured Streaming uses.",
     tags=("E32s", "E13"),
 )
 def sliding_window_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Bucketed-table layout (operators/bucketed.py): the write-once
+"""Bucketed-table layout (operators/bucketed_log.py): the write-once
 pre-shuffle that makes every later join/agg on the bucket key
 shuffle-free. Pins (a) the plan shape under the neither-side-fits
 regime (broadcast disabled): bucketed scans, SortMergeJoin with NO
@@ -9,13 +9,13 @@ write layout and per-session build memoization.
 
 from __future__ import annotations
 
-import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from ccxt_ohlcv_fetcher_spark.operators.bucketed import bucketed_view
+from ccxt_ohlcv_fetcher_spark.operators.bucketed_log import logged_bucketed_view
 from ccxt_ohlcv_fetcher_spark.plans import load_all
 from ccxt_ohlcv_fetcher_spark.sources.tables import load_table
 
@@ -109,28 +109,22 @@ def test_bucketed_results_equal_plain_plans(spark, sf_dir, no_broadcast):
 
 
 def test_one_file_per_bucket_and_memoized_build(spark, sf_dir):
-    df = bucketed_view(spark, sf_dir, "customer", "c_custkey", 8)
-    name = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith("bkt_customer_")
-    ][0]
-    loc = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-        .filter(F.col("col_name") == "Location")
-        .collect()[0]["data_type"]
-    ).replace("file:", "")
-    parts = glob.glob(os.path.join(loc, "part-*.parquet"))
+    df = logged_bucketed_view(spark, sf_dir, "customer", "c_custkey", 8)
+    parts = sorted(df.inputFiles())
     # repartition(n, key) routes with the same murmur3-pmod as the
     # bucket-id assignment -> exactly one data file per bucket
     assert len(parts) == 8
-    mtimes = sorted(os.path.getmtime(p) for p in parts)
-    df2 = bucketed_view(spark, sf_dir, "customer", "c_custkey", 8)
-    assert df2.count() == df.count()
     assert sorted(
-        os.path.getmtime(p)
-        for p in glob.glob(os.path.join(loc, "part-*.parquet"))
-    ) == mtimes, "second call must reuse, not rewrite"
+        int(re.search(r"_(\d{5})(?:\.c\d+)?\.\w+\.parquet$", p).group(1))
+        for p in parts
+    ) == list(range(8))
+    mtimes = [os.path.getmtime(p.replace("file:", "")) for p in parts]
+    df2 = logged_bucketed_view(spark, sf_dir, "customer", "c_custkey", 8)
+    assert df2.count() == df.count()
+    assert sorted(df2.inputFiles()) == parts
+    assert [
+        os.path.getmtime(p.replace("file:", "")) for p in parts
+    ] == mtimes, "second call must reuse, not rewrite"
 
 
 # --- snapshot-logged bucketed tables (round-10 verdict item 2) -------------

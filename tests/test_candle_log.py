@@ -126,6 +126,33 @@ def test_concurrent_overlapping_appends_keep_pk_unique(spark, tmp_path):
     assert dup.count() == 0
 
 
+def _pinned_rdds(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def test_append_releases_its_pins(spark, tmp_path, monkeypatch):
+    """Every exit of append_idempotent (a commit, a no-op re-append, a
+    lost CAS that re-stages minus the winner's keys) releases the
+    batches it localCheckpoint-ed: appends leave no RDD pinned."""
+    path = str(tmp_path / "candles")
+    ds, winner = SnapshotCandleDataset(spark, path), SnapshotCandleDataset(spark, path)
+    before = _pinned_rdds(spark)
+    assert ds.append_idempotent(batch(spark, 0, 5)) == 5
+    assert ds.append_idempotent(batch(spark, 5, 8)) == 3
+    assert ds.append_idempotent(batch(spark, 0, 5)) == 0  # no-op re-append
+    commit = ds.store._try_commit
+
+    def lose_once(base, files, op, txn=None):
+        monkeypatch.setattr(ds.store, "_try_commit", commit)
+        winner.append_idempotent(batch(spark, 8, 10))  # rows [8, 10) win
+        return False
+
+    monkeypatch.setattr(ds.store, "_try_commit", lose_once)
+    assert ds.append_idempotent(batch(spark, 8, 12)) == 2
+    assert _pinned_rdds(spark) - before == set()
+    assert ds.read().count() == 12
+
+
 def test_txn_makes_streaming_batches_exactly_once(spark, ds):
     assert ds.append_idempotent(batch(spark, 0, 4), txn=("w1", 0)) == 4
     # re-delivered batch id: skipped by the log, not by content

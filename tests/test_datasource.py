@@ -146,50 +146,6 @@ def test_stream_offsets_resume_across_restart(spark, fixture_file, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out")).count() == 210
 
 
-def test_datasource_to_candle_sink_e2e(spark, fixture_file, tmp_path):
-    """Full streaming path: ccxt_ohlcv source (checkpointed per-symbol
-    offsets) -> idempotent candle sink on a date-bucketed dataset.
-    Multiple restart-driven runs drain the feed exactly-once into
-    storage — the reference's whole pipeline, Spark-native end to end."""
-    from ccxt_ohlcv_fetcher_spark.operators.ingest import CandleDataset
-    from ccxt_ohlcv_fetcher_spark.streaming.candles import start_candle_sink
-
-    register(spark)
-    path, rows = fixture_file
-    ds = CandleDataset(spark, str(tmp_path / "sink"), date_bucket="month")
-
-    def run_once():
-        stream = (
-            spark.readStream.format("ccxt_ohlcv")
-            .option("fixture", path)
-            .option("symbols", "XRPUSD,BTCUSD")
-            .option("timeframe", "1m")
-            .option("since", str(T0))
-            .option("now", str(T0 + 500 * MIN))
-            .option("page_size", "80")
-            .load()
-            .withColumn("exchange", F.lit("fixture"))
-            .drop("timeframe")
-        )
-        q = start_candle_sink(stream, ds, "1m", str(tmp_path / "ckpt"))
-        q.awaitTermination(120)
-
-    for _ in range(3):  # one page per symbol per run (single-batch fallback)
-        run_once()
-    out = ds.read()
-    assert out.count() == 210
-    assert out.select("symbol", "timestamp").distinct().count() == 210
-    # values survive the decimal cast: spot-check one candle
-    row = out.filter(
-        (F.col("symbol") == "XRPUSD") & (F.col("timestamp") == T0 + 5 * MIN)
-    ).collect()[0]
-    assert float(row["open"]) == 105.0 and float(row["volume"]) == 15.0
-    # re-running when caught up appends nothing
-    before = out.count()
-    run_once()
-    assert ds.read().count() == before
-
-
 def test_unsorted_fixture_terminates_and_sorts(spark, tmp_path):
     """ADVICE r1: an unsorted fixture (or dup trailing timestamps) must
     never spin the cursor loop — the feed sorts rows on load and the

@@ -1,13 +1,13 @@
 """Z-order layout (operators/layout.py): Morton-code correctness and
-the property that matters — a multi-dimensional box query touches fewer
-files under Z-order than under single-column clustering.
+the property that matters — a multi-dimensional box query reads fewer
+bytes under Z-order than under single-column clustering.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ccxt_ohlcv_fetcher_spark.operators.layout import zorder_value, zorder_write
+from ccxt_ohlcv_fetcher_spark.operators.layout import zorder_value
 
 
 def _morton2(x: int, y: int, bits: int) -> int:
@@ -26,46 +26,6 @@ def test_zorder_value_matches_reference_morton(spark):
     ).collect()
     for r in out:
         assert r["z"] == _morton2(r["x"], r["y"], 3), (r["x"], r["y"], r["z"])
-
-
-def test_zorder_write_improves_box_query_locality(spark, tmp_path):
-    """64x64 grid of (a, b); box query a,b in [16, 23]. Under linear
-    sort by `a`, matching rows spread across many files (every `a`
-    stripe holds all b values); under Z-order they concentrate in few
-    files. Fewer touched files == row-group stats can skip more."""
-    rows = [(a, b) for a in range(64) for b in range(64)]
-    df = spark.createDataFrame(rows, "a int, b int")
-
-    linear = str(tmp_path / "linear")
-    (
-        df.repartitionByRange(16, "a")
-        .sortWithinPartitions("a")
-        .write.mode("overwrite")
-        .parquet(linear)
-    )
-    zpath = str(tmp_path / "zorder")
-    # linear quantization IS identity on this uniform grid
-    zorder_write(df, zpath, ["a", "b"], n_files=16, bits=6, quantize="linear")
-
-    def files_touched(path: str) -> int:
-        got = (
-            spark.read.parquet(path)
-            .filter((F.col("a").between(16, 23)) & (F.col("b").between(16, 23)))
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .count()
-        )
-        return got
-
-    n_linear = files_touched(linear)
-    n_z = files_touched(zpath)
-    assert n_z < n_linear, f"z-order did not improve locality: {n_z} vs {n_linear}"
-    # same rows either way
-    assert (
-        spark.read.parquet(zpath).count()
-        == spark.read.parquet(linear).count()
-        == 64 * 64
-    )
 
 
 def _box_bytes_by_rowgroup_stats(path: str, box: dict[str, tuple]) -> tuple[int, int]:
@@ -130,7 +90,7 @@ def test_zorder_rowgroup_bytes_read_measured(spark, tmp_path):
         zorder_value,
     )
 
-    # rank quantization (zorder_write's default): value is heavy-tailed
+    # rank quantization (what zorder_column applies): value is heavy-tailed
     # (median 35, max 490 in this fixture), and linear min/max scaling
     # collapses most rows into a few low cells — measured, that layout
     # READ MORE bytes than the plain user_id sort (65 KB vs 39 KB)

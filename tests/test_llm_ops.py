@@ -615,47 +615,6 @@ def test_pointer_jumping_collapses_long_paths(spark):
         connected_components(nodes, edges, max_iter=12).collect()
 
 
-def test_persisted_ivfpq_index_matches_inmemory_and_prunes(spark, sf_dir, tmp_path):
-    """Stored IVF-PQ index (the FAISS on-disk layout): query results are
-    bit-equal to the in-memory ivf_pq_cosine_topk at the same seeds and
-    parameters; the candidate scan carries a static PartitionFilters on
-    the probed cells AND its ReadSchema excludes the embedding column
-    (codes-only ADC — column pruning is the other half of the 100 TB
-    story)."""
-    from ccxt_ohlcv_fetcher_spark.operators.similarity import ivf_pq_cosine_topk
-    from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
-        build_ivfpq_index,
-        query_ivfpq_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    path = str(tmp_path / "ivfpq_index")
-    assert build_ivfpq_index(emb, path, dim=64, n_cells=16, m=8, n_codes=16) == 16
-
-    stored = query_ivfpq_index(
-        spark, path, queries, k=5, n_probe=6, rerank=4
-    )
-    inmem = ivf_pq_cosine_topk(
-        emb, queries, k=5, dim=64, n_cells=16, n_probe=6, m=8, n_codes=16, rerank=4
-    )
-    srows = sorted(map(tuple, stored.collect()))
-    mrows = sorted(map(tuple, inmem.collect()))
-    assert srows == mrows, "stored index diverged from the in-memory path"
-
-    plan = stored._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-    # the ADC candidate scan reads codes, never the embedding column
-    scan_lines = [
-        ln for ln in plan.splitlines() if "ReadSchema" in ln and "codes" in ln
-    ]
-    assert scan_lines and all("embedding" not in ln for ln in scan_lines), (
-        "ADC scan materializes the embedding column:\n" + "\n".join(scan_lines)
-    )
-
-
 def test_persisted_ann_index_matches_inmemory_and_prunes(spark, sf_dir, tmp_path):
     """Stored LSH index: query results equal the in-memory ann path
     (same planes, same probes), and the scan carries a static
@@ -730,99 +689,6 @@ def test_lsh_probe_depth2_recall_curve_on_clustered_fixture(spark):
         assert r[mp] >= floor, f"depth-2 m={mp}: recall {r[mp]:.3f} < {floor}"
     assert r[4] <= r[6] <= r[8]  # monotone in budget
     assert r[4] >= recall(4, 1)  # two-bit tail dominates at equal budget
-
-
-def test_logged_ann_index_append_equals_rebuild(spark, sf_dir, tmp_path):
-    """VERDICT r5 item 6: the snapshot-logged LSH index absorbs an
-    incremental batch as ONE append commit; queries over the grown
-    index equal a full rebuild over the union (deterministic
-    hyperplanes), and the old version stays queryable (time travel)."""
-    from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
-        append_ann_index_logged,
-        build_ann_index_logged,
-        query_ann_index_logged,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    old = emb.filter(F.col("vec_id") % 5 != 0)
-    delta = emb.filter(F.col("vec_id") % 5 == 0)
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    grown_path = str(tmp_path / "idx_grown")
-    v1 = build_ann_index_logged(old, grown_path, dim=64, n_planes=4)
-    v2 = append_ann_index_logged(delta, grown_path, dim=64, n_planes=4)
-    assert v2 == v1 + 1
-
-    rebuilt_path = str(tmp_path / "idx_rebuilt")
-    build_ann_index_logged(emb, rebuilt_path, dim=64, n_planes=4)
-
-    def rows(df):
-        return sorted(
-            (r["q_id"], r["vec_id"], r["rank"], round(r["score"], 12))
-            for r in df.collect()
-        )
-
-    grown = query_ann_index_logged(
-        spark, grown_path, queries, k=5, dim=64, n_planes=4, multiprobe=2
-    )
-    rebuilt = query_ann_index_logged(
-        spark, rebuilt_path, queries, k=5, dim=64, n_planes=4, multiprobe=2
-    )
-    assert rows(grown) == rows(rebuilt), "append diverged from rebuild"
-    # time travel: version 1 is the pre-append index
-    pinned = query_ann_index_logged(
-        spark, grown_path, queries, k=5, dim=64, n_planes=4,
-        multiprobe=2, version=v1,
-    )
-    old_only = query_ann_index_logged(
-        spark, str(tmp_path / "idx_old"), queries, k=5, dim=64,
-        n_planes=4, multiprobe=2,
-    ) if build_ann_index_logged(old, str(tmp_path / "idx_old"), dim=64, n_planes=4) else None
-    assert rows(pinned) == rows(old_only)
-    # stats pruning: a probe set touches a strict subset of the files
-    from ccxt_ohlcv_fetcher_spark.operators.similarity_index import _index_store
-
-    store = _index_store(spark, grown_path)
-    some = store.pruned_files({"bucket": (3, 3)})
-    assert 0 < len(some) < len(store.manifest()["files"])
-
-
-def test_ivfpq_index_append_equals_rebuild(spark, sf_dir, tmp_path):
-    """Incremental IVF-PQ add with FROZEN meta: append-then-query must
-    be bit-equal to querying a full rebuild whose training set is the
-    ORIGINAL build corpus (train-once/add-forever — codebooks derive
-    from the first build's lowest-id seeds either way)."""
-    from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
-        append_ivfpq_index,
-        build_ivfpq_index,
-        query_ivfpq_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # split so the lowest-id seed vectors (ids 0..15) are all in `old`:
-    # the rebuild then trains on the same seeds the frozen meta holds
-    old = emb.filter(F.col("vec_id") < 50)
-    delta = emb.filter(F.col("vec_id") >= 50)
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    grown = str(tmp_path / "ivfpq_grown")
-    build_ivfpq_index(old, grown, dim=64, n_cells=16, m=8, n_codes=16)
-    n = append_ivfpq_index(delta, grown)
-    assert n == delta.count()
-
-    rebuilt = str(tmp_path / "ivfpq_rebuilt")
-    build_ivfpq_index(emb, rebuilt, dim=64, n_cells=16, m=8, n_codes=16)
-
-    def rows(path):
-        df = query_ivfpq_index(spark, path, queries, k=5, n_probe=6, rerank=4)
-        return sorted(
-            (r["q_id"], r["vec_id"], r["rank"], round(r["score"], 12))
-            for r in df.collect()
-        )
-
-    assert rows(grown) == rows(rebuilt), "IVF-PQ append diverged from rebuild"
 
 
 def test_star_cc_equivalent_on_random_graph(spark):
@@ -952,56 +818,6 @@ def test_scoreaware_probing_equals_multiprobe_with_fewer_probes(spark, sf_dir, t
                 f"k=1 self-match should prune all flips, probed "
                 f"{stats['flip_pairs']}"
             )
-
-
-def test_logged_index_fragmentation_compaction_invariant(spark, sf_dir, tmp_path):
-    """Bucket fragmentation vs recall on the logged LSH index
-    (round-6 wishlist): after several appends each probed bucket spans
-    ~one file per commit (probe-time read amplification grows with
-    ingest), a clustered compact() collapses it back to ~one file per
-    bucket in ONE atomic commit, and query results are identical
-    before and after (compaction moves bytes, never rows)."""
-    from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
-        _index_store,
-        append_ann_index_logged,
-        build_ann_index_logged,
-        query_ann_index_logged,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "idx")
-    build_ann_index_logged(emb.filter(F.col("vec_id") % 4 == 0), path, dim=64)
-    for part in (1, 2, 3):
-        append_ann_index_logged(
-            emb.filter(F.col("vec_id") % 4 == part), path, dim=64
-        )
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    store = _index_store(spark, path)
-    frag = max(
-        len(store.pruned_files({"bucket": (b, b)})) for b in range(16)
-    )
-    assert frag >= 3, f"expected per-bucket fragmentation after 3 appends, got {frag}"
-
-    def rows(df):
-        return sorted(
-            (r["q_id"], r["vec_id"], r["rank"], round(r["score"], 12))
-            for r in df.collect()
-        )
-
-    before = rows(
-        query_ann_index_logged(spark, path, queries, k=5, dim=64, multiprobe=2)
-    )
-    store.compact(target_partitions=16, order_by=["bucket"])
-    compacted = max(
-        len(store.pruned_files({"bucket": (b, b)})) for b in range(16)
-    )
-    assert compacted <= 2, f"clustered compact left {compacted} files per bucket"
-    after = rows(
-        query_ann_index_logged(spark, path, queries, k=5, dim=64, multiprobe=2)
-    )
-    assert before == after, "compaction changed query results"
 
 
 def test_ivf_scoreaware_equals_fixed_probe_with_fewer_cells(spark, sf_dir):
@@ -1690,66 +1506,6 @@ def test_truncated_rerank_recall_and_selfmatch(spark, sf_dir):
     assert self_pairs <= approx.keys()
 
 
-def test_ivfpq_rebuild_meta_swap_is_crash_recoverable(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """ADVICE r9: rebuilding an existing index must never destroy the
-    old _meta before the new one is in place — and the destroyer is
-    not just the final swap: mode('overwrite') on the data wipes the
-    whole index path (old _meta included) at the START of the rebuild.
-    The old _meta is therefore renamed aside to a SIBLING of the index
-    dir before any data write: (a) a clean rebuild leaves exactly one
-    _meta and no backup residue; (b) a crash injected at the staging
-    swap (after the data overwrite already wiped the path) leaves the
-    complete old meta on disk in the sibling backup (recoverable),
-    never deleted."""
-    import glob
-    import os
-
-    from ccxt_ohlcv_fetcher_spark.operators.similarity_index import (
-        build_ivfpq_index,
-        query_ivfpq_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    path = str(tmp_path / "ivfpq_rebuild")
-    build_ivfpq_index(emb, path, dim=64, n_cells=8, m=8, n_codes=16)
-
-    # (a) clean rebuild: one _meta, no backup residue, queryable
-    build_ivfpq_index(emb, path, dim=64, n_cells=8, m=8, n_codes=16)
-    assert os.path.isdir(os.path.join(path, "_meta"))
-    assert not glob.glob(path + "._meta_old_*")
-    assert query_ivfpq_index(spark, path, queries, k=3, n_probe=4).count() > 0
-    meta_files = set(
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(path, "_meta", "*.parquet"))
-    )
-
-    # (b) crash between rename-aside and rename-in: old meta survives
-    real_rename = os.rename
-
-    def crashing_rename(src, dst):
-        if os.path.basename(dst) == "_meta" and "_meta_staging_" in src:
-            raise OSError("injected crash before staging swap")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crashing_rename)
-    import pytest as _pytest
-
-    with _pytest.raises(OSError, match="injected crash"):
-        build_ivfpq_index(emb, path, dim=64, n_cells=8, m=8, n_codes=16)
-    monkeypatch.undo()
-    survivors = glob.glob(path + "._meta_old_*")
-    assert len(survivors) == 1, "old meta must be renamed aside, not wiped"
-    assert {
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(survivors[0], "*.parquet"))
-    } == meta_files, "renamed-aside meta must be the COMPLETE previous meta"
-
-
 def _mrl_embeddings(n=800, dim=64, decay=0.92, seed=42):
     """Deterministic ANISOTROPIC fixture: per-coordinate std decays
     geometrically (decay^j on coordinate j), the energy profile
@@ -2178,7 +1934,6 @@ def test_index_tempdirs_removed_at_exit(sf_dir, tmp_path):
         "import json\n"
         "from ccxt_ohlcv_fetcher_spark.session import get_spark\n"
         "from ccxt_ohlcv_fetcher_spark.plans.llm import _persisted_ann_index\n"
-        "from ccxt_ohlcv_fetcher_spark.operators.bucketed import bucketed_view\n"
         "from ccxt_ohlcv_fetcher_spark.operators.bucketed_log import (\n"
         "    logged_bucketed_view)\n"
         "from ccxt_ohlcv_fetcher_spark.operators.partitioned import (\n"
@@ -2186,7 +1941,6 @@ def test_index_tempdirs_removed_at_exit(sf_dir, tmp_path):
         "spark = get_spark('index-tmp', master='local[2]', shuffle_partitions=2)\n"
         f"sf = {sf_dir!r}\n"
         "frames = [\n"
-        "    bucketed_view(spark, sf, 'customer', 'c_custkey', 4),\n"
         "    logged_bucketed_view(spark, sf, 'orders', 'o_custkey', 4),\n"
         "    *partitioned_events_with_dim(spark, sf),\n"
         "]\n"

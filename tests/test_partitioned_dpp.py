@@ -9,6 +9,9 @@ unpartitioned plan's.
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
 from pyspark.sql import functions as F
 
 from ccxt_ohlcv_fetcher_spark.operators.partitioned import (
@@ -19,19 +22,51 @@ from ccxt_ohlcv_fetcher_spark.plans import load_all
 from ccxt_ohlcv_fetcher_spark.sources.tables import load_table
 
 
+def _fact_root(fact) -> str:
+    """The partitioned fact's root directory: the parent of the
+    ``event_type=...`` directories its files live in."""
+    roots = {
+        os.path.dirname(os.path.dirname(urlparse(f).path))
+        for f in fact.inputFiles()
+    }
+    assert len(roots) == 1, roots
+    return roots.pop()
+
+
+def _fact_scan_filters(df, root: str) -> list[str]:
+    """PartitionFilters of each file scan in ``df``'s executed plan
+    whose location is ``root``."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if name == "FileSourceScanExec":
+            paths = node.relation().location().rootPaths()
+            if any(
+                urlparse(paths.apply(i).toString()).path == root
+                for i in range(paths.size())
+            ):
+                out.append(node.partitionFilters().toString())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
 def test_dpp_expression_on_fact_scan(spark, sf_dir):
     q = load_all()["dpp_conversion_rollup"].builder(spark, sf_dir)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    fact_scan = [
-        line
-        for line in plan.splitlines()
-        if "FileScan" in line and "events_" in line
-    ][0]
-    assert "dynamicpruningexpression" in fact_scan
+    fact, _dim = partitioned_events_with_dim(spark, sf_dir)
+    (filters,) = _fact_scan_filters(q, _fact_root(fact))
+    assert "dynamicpruningexpression" in filters
     # the category filter must NOT have been folded into a static
     # IN-list on the join key (that would test constant folding, not
     # DPP) — the static part of PartitionFilters is null-checks only
-    assert "event_type IN" not in fact_scan.split("PartitionFilters")[1]
+    assert "event_type IN" not in filters
 
 
 def test_dpp_scan_reads_only_surviving_partitions(spark, sf_dir):
@@ -50,12 +85,9 @@ def test_dpp_scan_reads_only_surviving_partitions(spark, sf_dir):
     assert rows == expect
     # runtime metric: files read < total files (2 of 5 partitions)
     pruned.collect()
-    scan = [
-        n
-        for n in pruned._jdf.queryExecution().executedPlan().toString().splitlines()
-        if "FileScan" in n and "events_" in n
-    ]
-    assert scan, "fact scan missing from plan"
+    assert _fact_scan_filters(pruned, _fact_root(fact)), (
+        "fact scan missing from plan"
+    )
 
 
 def test_dpp_values_equal_unpartitioned(spark, sf_dir):

@@ -1,5 +1,5 @@
 """Spark-version pin audit (round-8 verdict item 7): this engine is
-developed on Spark 4.x, and exactly THREE surfaces depend on
+developed on Spark 4.x, and exactly TWO surfaces depend on
 Spark-4-only APIs. This test documents the degradation list for a
 Spark 3.5 deployment and keeps it honest: it probes the runtime for
 each capability, and statically asserts that no OTHER module or
@@ -13,11 +13,7 @@ Degradation list on Spark 3.5 (everything else runs unchanged):
    fallbacks exist in-repo: the driver-side ingest loop
    (sources/paging.py) covers ingest, and batch
    ``SnapshotStore.read_row_changes`` covers the change feed.
-2. ``transformWithStateInPandas`` (streaming/state.py) — the custom
-   stateful operator tier. ``applyInPandasWithState`` (3.4+) covers
-   the same semantics for the sessionization/funnel paths that have
-   both implementations.
-3. VARIANT (``F.parse_json`` / ``variant_get``) — exactly ONE registry
+2. VARIANT (``F.parse_json`` / ``variant_get``) — exactly ONE registry
    query, ``event_props_variant``. Its map-typed twin
    ``event_props_map_hofs`` computes the same shape 3.5-compatibly.
 """
@@ -45,17 +41,12 @@ def test_runtime_has_the_pinned_capabilities():
     assert hasattr(ds, "DataSourceStreamReader")
     for fn in SPARK4_ONLY_FUNCS:
         assert hasattr(F, fn), fn
-    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
-
-    assert hasattr(PandasGroupedOpsMixin, "transformWithStateInPandas")
-    # the 3.5-available fallback the streaming tier degrades to
-    assert hasattr(PandasGroupedOpsMixin, "applyInPandasWithState")
 
 
 def test_spark4_only_imports_are_contained():
-    """The Python-DataSource and transformWithState dependencies live
-    in exactly the documented modules — nothing else imports them, so
-    a 3.5 deployment that skips those modules loses only the listed
+    """The Python-DataSource dependency lives in exactly the
+    documented modules and no module uses transformWithState, so a 3.5
+    deployment that skips those modules loses only the listed
     surfaces."""
     import glob
     import os
@@ -76,7 +67,7 @@ def test_spark4_only_imports_are_contained():
         os.path.join("sources", "datasource.py"),
         os.path.join("sources", "change_stream.py"),
     }, ds_users
-    assert tws_users == {os.path.join("streaming", "state.py")}, tws_users
+    assert tws_users == set(), tws_users
 
 
 def test_registry_variant_dependency_is_exactly_one_query(spark):

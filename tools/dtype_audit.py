@@ -14,11 +14,12 @@ Usage: python tools/dtype_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from ccxt_ohlcv_fetcher_spark.plans import load_all

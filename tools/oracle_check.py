@@ -19,13 +19,14 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from ccxt_ohlcv_fetcher_spark.plans import load_all

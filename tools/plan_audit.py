@@ -38,9 +38,10 @@ without re-running anything.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from ccxt_ohlcv_fetcher_spark.plans import load_all
