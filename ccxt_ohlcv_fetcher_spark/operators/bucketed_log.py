@@ -73,7 +73,7 @@ _VIEW_TABLE_CAP = 16
 class BucketedSnapshotStore(SnapshotStore):
     """A SnapshotStore whose physical layout is hash-bucketed on a
     declared key. All log semantics (CAS commits, txn idempotency,
-    constraints, stats/bloom pruning, time travel, vacuum) are
+    constraints, stats pruning, time travel, vacuum) are
     inherited; only the data-file writer and the read surface change.
 
     ``bucket_col``/``n_buckets`` may be omitted when opening an
@@ -174,21 +174,15 @@ class BucketedSnapshotStore(SnapshotStore):
         what the read-side external table uses to map files to buckets.
         ``repartition(n, col)`` uses the same murmur3-pmod routing as
         the bucket assignment, so each task holds exactly one bucket
-        and a commit writes at most one file per bucket. Under column
-        mapping the staged frame carries PHYSICAL names — the bucket
-        key resolves through the stage's logical->physical map (the
-        hash is over values, so the layout is name-independent)."""
-        key = getattr(self, "_staging_physical", {}).get(
-            self.bucket_col, self.bucket_col
-        )
+        and a commit writes at most one file per bucket."""
         tmp = f"_bktlog_stage_{uuid.uuid4().hex[:12]}"
         (
-            df.repartition(self.n_buckets, F.col(f"`{key}`"))
+            df.repartition(self.n_buckets, F.col(f"`{self.bucket_col}`"))
             .write.format("parquet")
             .mode("overwrite")
             .option("path", commit_dir)
-            .bucketBy(self.n_buckets, key)
-            .sortBy(key)
+            .bucketBy(self.n_buckets, self.bucket_col)
+            .sortBy(self.bucket_col)
             .saveAsTable(tmp)
         )
         # external table (explicit path): DROP unregisters, files stay
@@ -376,25 +370,13 @@ class BucketedSnapshotStore(SnapshotStore):
             return self.read(version)
         vd = self._view_dir(m["version"])
         name = self._view_table_name(m["version"])
-        # under column mapping the files (and so the external table)
-        # carry PHYSICAL names; the scan is aliased back to logical
-        # below — Spark's alias-aware output partitioning keeps the
-        # HashPartitioning(bucket key) through the projection, so the
-        # zero-exchange property survives renames (pinned in
-        # tests/test_column_mapping.py)
-        mapping = m.get("column_mapping") or {}
-        key_phys = mapping.get(spec["col"], spec["col"])
+        key = spec["col"]
         if not self.spark.catalog.tableExists(name):
-            pairs = (
-                [[mapping.get(n, n), t] for n, t in m["schema"]]
-                if mapping
-                else m["schema"]
-            )
-            ddl = self._ddl(pairs)
+            ddl = self._ddl(m["schema"])
             self.spark.sql(
                 f"CREATE TABLE {name} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY (`{key_phys}`) "
-                f"SORTED BY (`{key_phys}`) "
+                f"CLUSTERED BY (`{key}`) "
+                f"SORTED BY (`{key}`) "
                 f"INTO {spec['n']} BUCKETS LOCATION '{vd}'"
             )
         # resolve BEFORE LRU bookkeeping: the returned plan is analyzed
@@ -418,13 +400,6 @@ class BucketedSnapshotStore(SnapshotStore):
             df = keyed.join(
                 F.broadcast(dv), ["_b", "_pos"], "left_anti"
             ).drop("_b", "_pos")
-        if mapping:
-            df = df.select(
-                *[
-                    F.col(f"`{mapping.get(n, n)}`").alias(n)
-                    for n, _t in m["schema"]
-                ]
-            )
         self._touch_view_table(name)
         return df
 

@@ -454,12 +454,6 @@ class SnapshotCandleDataset:
             if dropped == 0:
                 return 0
             store._pending_schema = m.get("schema")
-            # metadata-only commit: never carry mapping pendings a
-            # FAILED earlier stage left on this instance (the
-            # add_constraint rule) — a lost evolving append must not
-            # stamp its fresh-but-uncommitted physical names here
-            store._pending_column_mapping = None
-            store._pending_cm_burned = None
             store._pending_stats = {}
             if store._try_commit(base, keep, "retention"):
                 return dropped

@@ -73,62 +73,16 @@ class CommitConflict(RuntimeError):
 #: Protocol version this reader implements (Delta's minReaderVersion
 #: idea, scaled down): a manifest may stamp ``min_reader`` when a
 #: commit introduces a feature older readers would MISREAD rather than
-#: merely miss — column mapping is the first (a mapping-blind reader
-#: would project logical names over physical files and return
-#: all-NULL columns, silent corruption). Readers refuse tables whose
-#: ``min_reader`` exceeds what they implement: a loud error instead of
-#: wrong data.
-READER_VERSION = 3
+#: merely miss, and readers refuse tables whose ``min_reader`` exceeds
+#: this — a loud error instead of wrong data. Version 3 was column
+#: mapping (files under generated physical column names), which older
+#: engines stamped on every mapped table; this reader reads files by
+#: their logical names only, so it implements 2 and refuses those.
+READER_VERSION = 2
 
 
 class ConstraintViolation(ValueError):
     """Raised when staged rows violate a table CHECK constraint."""
-
-
-# --- per-file Bloom filters (manifest file-skipping for point lookups) ----
-
-_BLOOM_K = 4
-_BLOOM_MAX_BITS = 512 * 1024  # 64 KiB per (file, col) cap
-
-
-def _bloom_positions(value, mbits: int, k: int):
-    import hashlib
-
-    s = str(value)
-    for seed in range(k):
-        h = hashlib.md5(f"{seed}|{s}".encode()).hexdigest()
-        yield int(h[:16], 16) % mbits
-
-
-def _bloom_encode(values, k: int = _BLOOM_K) -> dict:
-    """~10 bits/distinct value (fpp ~1-2% at k=4), zlib+base64 for the
-    JSON manifest. Deterministic (md5 of the stringified value), so
-    blooms built anywhere agree."""
-    import base64
-    import zlib
-
-    mbits = min(max(1024, 10 * len(values)), _BLOOM_MAX_BITS)
-    mbits = (mbits + 7) // 8 * 8
-    buf = bytearray(mbits // 8)
-    for v in values:
-        for i in _bloom_positions(v, mbits, k):
-            buf[i >> 3] |= 1 << (i & 7)
-    return {
-        "b": base64.b64encode(zlib.compress(bytes(buf))).decode("ascii"),
-        "m": mbits,
-        "k": k,
-    }
-
-
-def _bloom_may_contain(entry: dict, value) -> bool:
-    import base64
-    import zlib
-
-    buf = zlib.decompress(base64.b64decode(entry["b"]))
-    return all(
-        buf[i >> 3] & (1 << (i & 7))
-        for i in _bloom_positions(value, entry["m"], entry["k"])
-    )
 
 
 def _version_at_timestamp_walk(head: int, manifest_path, ts: float) -> int:
@@ -418,29 +372,6 @@ def _apply_delta(state: dict, d: dict) -> dict:
     schema = d["schema"] if "schema" in d else state.get("schema")
     if schema:
         out["schema"] = schema
-    # logical->physical column mapping (Delta column-mapping "name"
-    # mode): inherits like the schema; a delta writes it only when the
-    # mapping changes (enable / rename / drop / add-column), and an
-    # explicit null clears it (restore to a pre-mapping version)
-    cm = (
-        d["column_mapping"]
-        if "column_mapping" in d
-        else state.get("column_mapping")
-    )
-    if cm:
-        out["column_mapping"] = cm
-    # physical names burned by DROP COLUMN: they still exist inside
-    # live data files, so no future logical column may ever bind to
-    # one (the old values would resurrect) — the tombstone list rides
-    # the manifest exactly so that EVERY writer, not just the
-    # dropping instance, respects it (Delta's never-reuse column ids)
-    burned = (
-        d["column_mapping_burned"]
-        if "column_mapping_burned" in d
-        else state.get("column_mapping_burned")
-    )
-    if burned:
-        out["column_mapping_burned"] = burned
     # protocol floor inherits like the schema; a delta may raise it
     # (never lower — a feature's files stay on disk once written)
     mr = d["min_reader"] if "min_reader" in d else state.get("min_reader")
@@ -552,8 +483,8 @@ def _ckpt_write_parquet(state: dict, out_path: str) -> None:
         paths.append(f)
         s = stats.get(f)
         # per-file stats ride as a pre-keyed JSON fragment
-        # ('"path":{...}'): their shape is open (min/max pairs, _bloom
-        # blobs, _bytes, future fields) and the decode then reassembles
+        # ('"path":{...}'): their shape is open (min/max pairs,
+        # _bytes, _rows, future fields) and the decode then reassembles
         # the whole stats dict with ONE C-speed json.loads over a join
         # of the column — a million tiny per-row parses (or per-row
         # key-quoting) on the read path is what made the naive decode
@@ -663,7 +594,6 @@ class SnapshotStore:
         spark: SparkSession,
         path: str,
         stats_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
         checkpoint_interval: int = 20,
         checkpoint_format: str = "json",
     ):
@@ -672,17 +602,6 @@ class SnapshotStore:
         manifest (Iceberg-style file stats). Readers can then prune
         files from the LOG alone — no footer I/O, the operation that
         dominates listing-scale cost at 100 TB.
-
-        ``bloom_cols``: columns additionally given a small PER-FILE
-        Bloom filter in the manifest (Iceberg-puffin / Delta-stats
-        style). Min/max prunes RANGE predicates but is useless for
-        point lookups on scattered high-cardinality keys (every file's
-        range covers everything); the bloom answers "can file F
-        contain key = v?" from the LOG alone. Parquet's own bloom
-        filters would still cost one footer+page read per file — the
-        manifest copy costs zero I/O at query time. Sized at ~10 bits
-        per distinct value (k=4, fpp ~ 1-2%), capped at 64 KiB,
-        zlib+base64 in the manifest.
 
         ``checkpoint_format``: ``"json"`` (default) or ``"parquet"``
         (Delta's actual checkpoint encoding). A WRITE-side choice
@@ -705,7 +624,6 @@ class SnapshotStore:
         self.spark = spark
         self.path = path
         self.stats_cols = tuple(stats_cols or ())
-        self.bloom_cols = tuple(bloom_cols or ())
         self._manifest_dir = os.path.join(path, "_manifests")
         self._data_dir = os.path.join(path, "data")
         # full-state checkpoint cadence: every N commits the committer
@@ -1152,34 +1070,19 @@ class SnapshotStore:
         evolution read back with NULL for the missing columns instead
         of poisoning the scan with a mixed-footer union.
 
-        Under column mapping the files carry PHYSICAL names: the scan
-        schema is built physical and one projection aliases back to
-        the logical names every caller sees. ``extra_cols``: extra
-        Column expressions (``_metadata``-derived identity columns)
-        folded into that SAME projection — hidden metadata columns
-        resolve only against the scan output, so they must ride the
-        aliasing select, not a second one."""
+        ``extra_cols``: extra Column expressions (``_metadata``-derived
+        identity columns) selected beside the data columns, directly
+        over the scan — hidden metadata columns resolve only against
+        the scan output."""
         paths = [os.path.join(self.path, f) for f in files]
         reader = self.spark.read
         schema = manifest.get("schema")
-        mapping = manifest.get("column_mapping") or {}
         if schema:
-            pairs = (
-                [[mapping.get(n, n), t] for n, t in schema]
-                if mapping
-                else schema
-            )
-            reader = reader.schema(self._ddl(pairs))
+            reader = reader.schema(self._ddl(schema))
         df = reader.parquet(*paths)
-        if not mapping and not extra_cols:
+        if not extra_cols:
             return df
-        if schema and mapping:
-            cols = [
-                F.col(f"`{mapping.get(n, n)}`").alias(n) for n, _ in schema
-            ]
-        else:
-            cols = [F.col("*")]
-        return df.select(*cols, *extra_cols)
+        return df.select(F.col("*"), *extra_cols)
 
     def _rel_file_col(self):
         """The scan's ``_metadata.file_path`` (``file:/abs/...``) as the
@@ -1244,25 +1147,6 @@ class SnapshotStore:
         return live.select(*data_cols)
 
     @staticmethod
-    def _to_physical(df: DataFrame, manifest: dict) -> DataFrame:
-        """Rename a logical-named frame to the manifest's physical
-        column names (identity without mapping). Every parquet file
-        under the table root — data, change-feed, survivor — is
-        written physical, so the single read path (`_read_files`)
-        aliases them all back uniformly."""
-        mapping = manifest.get("column_mapping") or {}
-        if not mapping:
-            return df
-        return df.select(
-            *[
-                F.col(f"`{c.replace('`', '``')}`").alias(
-                    mapping.get(c, c)
-                )
-                for c in df.columns
-            ]
-        )
-
-    @staticmethod
     def _conform(df: DataFrame, schema_pairs: list) -> DataFrame:
         """Project ``df`` to exactly the evolved schema: existing
         columns pass through, columns the frame lacks become typed
@@ -1285,7 +1169,7 @@ class SnapshotStore:
         Spark's bucketBy so EVERY commit — append, compact rewrite,
         delete survivor — keeps the bucketed file naming); the staging
         pipeline around it (zero-row filter, constraints, stats,
-        blooms, relative paths) is layout-agnostic."""
+        relative paths) is layout-agnostic."""
         df.write.parquet(commit_dir)
 
     def _stage(self, df: DataFrame, allow_schema_change: bool = False) -> list[str]:
@@ -1306,63 +1190,6 @@ class SnapshotStore:
                 f"{incoming} — use overwrite() for schema changes"
             )
         self._pending_schema = incoming
-        # column mapping: files are written under PHYSICAL names. A
-        # logical column without a physical name yet (add-column
-        # evolution after enable_column_mapping) freezes a fresh one
-        # here — generated, never reused, so a later re-add of a
-        # dropped/renamed logical name cannot resurrect old file data.
-        mapping = dict(head.get("column_mapping") or {})
-        if mapping:
-            # fresh-name assignments are remembered per instance so the
-            # two _stage calls of one merge commit (survivors + added
-            # rows) physical-name an evolved column identically; a name
-            # assigned by a failed commit is merely burned, never
-            # duplicated (uniqueness is all the protocol needs)
-            assigned = getattr(self, "_phys_names_assigned", None)
-            if assigned is None:
-                assigned = self._phys_names_assigned = {}
-            # burned names (dropped columns) live inside LIVE data
-            # files under other rows — binding a new logical column to
-            # one would resurrect the dropped values
-            committed_phys = set(mapping.values()) | set(
-                head.get("column_mapping_burned") or ()
-            )
-            used = committed_phys | set(assigned.values())
-            for n, _t in incoming:
-                if n not in mapping:
-                    p = assigned.get(n)
-                    # a stale assignment colliding with a COMMITTED
-                    # physical name (re-added logical after a rename
-                    # raced this instance) must not resurrect old file
-                    # data — burn it and take a fresh name
-                    if p is None or p in committed_phys:
-                        p = f"col-{uuid.uuid4().hex[:8]}"
-                        while p in used:
-                            p = f"col-{uuid.uuid4().hex[:8]}"
-                        assigned[n] = p
-                        used.add(p)
-                    mapping[n] = p
-            # restrict to the STAGED schema: an overwrite() that drops
-            # columns must not carry their dead mapping entries forward
-            # — a later rename to a dead logical name would collide two
-            # keys onto one physical column (silent NULL reads). The
-            # head's files are replaced wholesale by such an overwrite,
-            # so no live file still carries the dropped physical name.
-            mapping = {n: mapping[n] for n, _t in incoming}
-            self._pending_column_mapping = mapping
-            # the physical-of map the layout hook may need (the
-            # bucketBy writer repartitions on the bucket key, which at
-            # this point carries its physical name)
-            self._staging_physical = dict(mapping)
-            df = df.select(
-                *[
-                    F.col(f"`{n.replace('`', '``')}`").alias(mapping[n])
-                    for n, _t in incoming
-                ]
-            )
-        else:
-            self._pending_column_mapping = None  # inherit (absent)
-            self._staging_physical = {}
         token = uuid.uuid4().hex[:12]
         commit_dir = os.path.join(self._data_dir, f"commit-{token}")
         self._write_stage_files(df, commit_dir)
@@ -1392,17 +1219,6 @@ class SnapshotStore:
         self._staged_constraints = constraints
         if constraints and files:
             staged_df = self.spark.read.parquet(*files)
-            if mapping:
-                # constraint expressions are written in LOGICAL names;
-                # the staged files carry physical ones — alias back
-                staged_df = staged_df.select(
-                    *[
-                        F.col(
-                            f"`{mapping[n].replace('`', '``')}`"
-                        ).alias(n)
-                        for n, _t in incoming
-                    ]
-                )
             for cname, expr in constraints.items():
                 bad = staged_df.filter(
                     F.coalesce(F.expr(expr), F.lit(True)) == F.lit(False)
@@ -1418,18 +1234,12 @@ class SnapshotStore:
                     )
         # store paths relative to the table root so the table can move
         rel = [os.path.relpath(f, self.path) for f in files]
-        # stats/bloom entries are keyed by PHYSICAL column name (the
-        # name in the footer) — a later rename moves only the
-        # logical->physical map, so every file's pruning stats stay
-        # valid without a manifest rewrite (pruned_files maps the
-        # caller's logical cols at lookup time)
-        stat_cols = tuple(mapping.get(c, c) for c in self.stats_cols)
         self._pending_stats = (
             {
-                r: self._footer_stats(f, md=md_of[f], cols=stat_cols)
+                r: self._footer_stats(f, md=md_of[f])
                 for r, f in zip(rel, files)
             }
-            if stat_cols
+            if self.stats_cols
             else {r: {} for r in rel}
         )
         # per-file byte size always rides the manifest: the bin-packing
@@ -1438,35 +1248,14 @@ class SnapshotStore:
         for r, f in zip(rel, files):
             self._pending_stats[r]["_bytes"] = os.path.getsize(f)
             self._pending_stats[r]["_rows"] = rows_of[f]
-        if self.bloom_cols:
-            # per-file Bloom filters ride the write path (the staged
-            # file is just-written and page-cache warm; one column read
-            # per bloom col) — query-time membership checks then cost
-            # ZERO file I/O, exactly like Iceberg puffin blobs
-            for r, f in zip(rel, files):
-                bl = {}
-                for col in (
-                    mapping.get(c, c) for c in self.bloom_cols
-                ):
-                    try:
-                        vals = pq.read_table(f, columns=[col]).column(0)
-                    except Exception:
-                        continue
-                    uniq = {v for v in vals.to_pylist() if v is not None}
-                    if uniq:
-                        bl[col] = _bloom_encode(uniq)
-                if bl:
-                    self._pending_stats.setdefault(r, {})["_bloom"] = bl
         return rel
 
-    def _footer_stats(self, path: str, md=None, cols=None) -> dict:
+    def _footer_stats(self, path: str, md=None) -> dict:
         """Per-file [min, max] for each stats col, from parquet footer
         metadata (no data read). A col missing stats is omitted —
         readers treat that as "may contain anything". ``md`` reuses an
         already-opened footer (the stage path opens each file's footer
-        once for the zero-row filter/_rows capture — no second open).
-        ``cols`` overrides ``self.stats_cols`` (the stage path passes
-        PHYSICAL names under column mapping)."""
+        once for the zero-row filter/_rows capture — no second open)."""
         import pyarrow.parquet as pq
 
         if md is None:
@@ -1475,7 +1264,7 @@ class SnapshotStore:
             md.schema.column(i).name: i for i in range(md.num_columns)
         }
         out: dict = {}
-        for col in (self.stats_cols if cols is None else cols):
+        for col in self.stats_cols:
             if col not in idx:
                 continue
             mins, maxs = [], []
@@ -1503,10 +1292,6 @@ class SnapshotStore:
         lacking stats for a constrained col is conservatively kept."""
         m = self.manifest(version)
         stats = m.get("stats", {})
-        mapping = m.get("column_mapping") or {}
-        if mapping:
-            # stats entries are keyed physical; callers speak logical
-            ranges = {mapping.get(c, c): b for c, b in ranges.items()}
         keep = []
         for f in m["files"]:
             fs = stats.get(f, {})
@@ -1520,36 +1305,6 @@ class SnapshotStore:
                     break
             else:
                 keep.append(f)
-        return keep
-
-    def pruned_files_eq(
-        self, col: str, value, version: int | None = None
-    ) -> list[str]:
-        """Files that MAY contain ``col = value``, from the log alone:
-        min/max range check first (free), then the per-file Bloom
-        filter (zero I/O, ~1-2% false positives, NO false negatives —
-        a pruned file provably lacks the key). The point-lookup
-        complement to :meth:`pruned_files`: on scattered
-        high-cardinality keys every file's [min, max] spans the probe
-        value and range pruning keeps everything, while the bloom
-        keeps only files that actually wrote the key (+fpp)."""
-        m = self.manifest(version)
-        stats = m.get("stats", {})
-        col = (m.get("column_mapping") or {}).get(col, col)
-        keep = []
-        for f in m["files"]:
-            fs = stats.get(f, {})
-            rng = fs.get(col)
-            if rng is not None:
-                try:
-                    if value < rng[0] or value > rng[1]:
-                        continue
-                except TypeError:
-                    pass  # incomparable types: fall through to bloom
-            bl = fs.get("_bloom", {}).get(col)
-            if bl is not None and not _bloom_may_contain(bl, value):
-                continue
-            keep.append(f)
         return keep
 
     def _try_commit(
@@ -1592,33 +1347,6 @@ class SnapshotStore:
         schema = getattr(self, "_pending_schema", None) or base.get("schema")
         if schema != base.get("schema"):
             delta["schema"] = schema
-        # column mapping rides the delta like the schema. Pending
-        # semantics: None/absent = inherit the base's; {} = explicitly
-        # clear (restore to a pre-mapping version); dict = set.
-        cm_pending = getattr(self, "_pending_column_mapping", None)
-        cm = (
-            base.get("column_mapping")
-            if cm_pending is None
-            else (cm_pending or None)
-        )
-        if cm != base.get("column_mapping"):
-            delta["column_mapping"] = cm
-        burned_pending = getattr(self, "_pending_cm_burned", None)
-        burned = (
-            base.get("column_mapping_burned")
-            if burned_pending is None
-            else (burned_pending or None)
-        )
-        if burned != base.get("column_mapping_burned"):
-            delta["column_mapping_burned"] = burned
-        # protocol floor: the first mapping-bearing commit raises the
-        # table's min_reader to 3 — a mapping-blind reader would
-        # silently project NULLs over physical-named files, so it must
-        # refuse instead (checked in _state). Never lowered: burned
-        # names / physical-named files stay on disk even if the
-        # mapping is later cleared by restore.
-        if (cm or burned) and (base.get("min_reader") or 2) < 3:
-            delta["min_reader"] = 3
         # commit wall-clock for timestamp time travel; monotonic
         # per-log by construction (max with the base's stamp) so a
         # clock step back cannot make version_at_timestamp ambiguous
@@ -1637,7 +1365,7 @@ class SnapshotStore:
             "bucket_spec"
         ):
             delta["bucket_spec"] = bucket_spec
-        # per-file stats/blooms ride with the files they describe:
+        # per-file stats ride with the files they describe:
         # only the staged (added) files' entries are written; retained
         # files keep theirs through reconstruction
         pending_stats = getattr(self, "_pending_stats", {})
@@ -1912,12 +1640,10 @@ class SnapshotStore:
         writer (this instance or any other process) then enforces it
         at stage time via the manifest — constraints travel with the
         TABLE, not the writer. NULL passes (SQL CHECK semantics)."""
-        # metadata-only commit: never carry schema/mapping pendings a
-        # FAILED earlier stage may have left on this instance (a lost
+        # metadata-only commit: never carry a schema pending a FAILED
+        # earlier stage may have left on this instance (a lost
         # evolving append must not stamp its schema via a constraint)
         self._pending_schema = None
-        self._pending_column_mapping = None
-        self._pending_cm_burned = None
         live = self.read()
         bad = live.filter(
             F.coalesce(F.expr(expr), F.lit(True)) == F.lit(False)
@@ -1947,8 +1673,6 @@ class SnapshotStore:
     def drop_constraint(self, name: str, max_retries: int = 10) -> int:
         """Remove a CHECK constraint (metadata-only commit)."""
         self._pending_schema = None
-        self._pending_column_mapping = None
-        self._pending_cm_burned = None
         for _ in range(max_retries):
             base = self.latest_version()
             m = self.manifest(base)
@@ -1962,226 +1686,6 @@ class SnapshotStore:
                 del self._pending_constraints
         raise CommitConflict(
             f"drop_constraint lost the CAS race {max_retries} times"
-        )
-
-    # --- column mapping (Delta column-mapping "name" mode) -----------------
-
-    @staticmethod
-    def _metadata_mentions(expr: str, col: str) -> bool:
-        """Whether a constraint expression textually references a
-        column (word match, plain or backtick-quoted). Conservative:
-        a hit inside a string literal also counts — refusing a rename
-        we could have allowed is safe; allowing one that orphans a
-        constraint reference is not. Case-INSENSITIVE, because Spark
-        SQL column resolution is (spark.sql.caseSensitive=false): a
-        constraint written "PRICE > 0" binds column `price`, so a
-        case-exact scan would let the rename orphan it."""
-        import re
-
-        pat = rf"(?<![A-Za-z0-9_]){re.escape(col)}(?![A-Za-z0-9_])"
-        return bool(re.search(pat, expr, re.IGNORECASE)) or (
-            f"`{col.lower()}`" in expr.lower()
-        )
-
-    def enable_column_mapping(self, max_retries: int = 10) -> int:
-        """Turn on logical->physical column mapping for this table in
-        one metadata-only commit — the precondition for
-        :meth:`rename_column` / :meth:`drop_column` (Delta's upgrade
-        path). Existing columns freeze their CURRENT name as the
-        physical one, so no data file is rewritten and every
-        already-written file (data, change-feed, checkpoints) stays
-        byte-valid; per-file stats/blooms are already keyed by those
-        names, so pruning is unaffected. Columns added AFTER enabling
-        get generated ``col-<hex>`` physical names, which is what
-        makes rename (move the map key) and drop (remove it; a
-        re-added name maps to a FRESH physical name, so old file data
-        can never resurrect) metadata-only operations. Idempotent:
-        returns the current version without a commit when mapping is
-        already on."""
-        for _ in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            schema = m.get("schema")
-            if not schema:
-                raise ValueError(
-                    "cannot enable column mapping on an empty table "
-                    "(no committed schema to freeze physical names from)"
-                )
-            if m.get("column_mapping"):
-                return base
-            self._pending_schema = list(schema)
-            self._pending_column_mapping = {n: n for n, _ in schema}
-            try:
-                if self._try_commit(base, m["files"], "metadata"):
-                    return base + 1
-            finally:
-                self._pending_schema = None
-                self._pending_column_mapping = None
-        raise CommitConflict(
-            f"enable_column_mapping lost the CAS race {max_retries} times"
-        )
-
-    def rename_column(
-        self, old: str, new: str, max_retries: int = 10
-    ) -> int:
-        """``ALTER TABLE ... RENAME COLUMN`` as ONE metadata-only
-        commit: the logical schema and the mapping key move; the
-        physical parquet name — and with it every data file, per-file
-        stat, bloom filter, and change file — stays untouched. Requires
-        :meth:`enable_column_mapping`. Refuses when a CHECK constraint
-        textually references ``old`` (the expression would silently
-        bind to nothing); the bucket key renames WITH the column (the
-        hash layout is over values, not names). Readers of OLD versions
-        still see the old name — the mapping travels per-manifest like
-        the schema."""
-        if old == new:
-            raise ValueError("rename_column: old and new name are equal")
-        for _ in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            mapping = m.get("column_mapping")
-            if not mapping:
-                raise ValueError(
-                    "rename_column requires column mapping — call "
-                    "enable_column_mapping() first (a rename without "
-                    "the map would need every data file rewritten)"
-                )
-            schema = m.get("schema") or []
-            names = [n for n, _ in schema]
-            # Spark column resolution is case-insensitive by default
-            # (like _metadata_mentions): casefold BOTH checks, else a
-            # rename to 'PRICE' beside existing 'price' commits two
-            # logical names that collide at resolution time
-            folded = {n.casefold(): n for n in names}
-            if old.casefold() not in folded:
-                raise ValueError(f"no such column: {old!r}")
-            old = folded[old.casefold()]  # bind to the committed casing
-            if new.casefold() in folded and folded[new.casefold()] != old:
-                raise ValueError(
-                    f"column {new!r} already exists (collides with "
-                    f"{folded[new.casefold()]!r} under Spark's "
-                    "case-insensitive resolution)"
-                )
-            for cname, expr in (m.get("constraints") or {}).items():
-                if self._metadata_mentions(expr, old):
-                    raise ValueError(
-                        f"cannot rename {old!r}: constraint {cname!r} "
-                        f"({expr}) references it — drop the constraint, "
-                        "rename, then re-add it under the new name"
-                    )
-            self._pending_schema = [
-                [new if n == old else n, t] for n, t in schema
-            ]
-            self._pending_column_mapping = {
-                (new if k == old else k): v for k, v in mapping.items()
-            }
-            spec = m.get("bucket_spec")
-            respec = spec is not None and spec.get("col") == old
-            had_spec = hasattr(self, "_pending_bucket_spec")
-            saved_spec = getattr(self, "_pending_bucket_spec", None)
-            committed_ok = False
-            if respec:
-                self._pending_bucket_spec = {**spec, "col": new}
-                self._allow_respec = True
-            try:
-                if self._try_commit(base, m["files"], "metadata"):
-                    committed_ok = True
-                    if respec and getattr(self, "bucket_col", None) == old:
-                        self.bucket_col = new
-                    # rebind this INSTANCE's logical column config too:
-                    # stats_cols/bloom_cols still naming the old
-                    # logical would miss the mapping at the next stage
-                    # and silently stop recording that column's
-                    # stats/blooms on every future file
-                    self.stats_cols = tuple(
-                        new if c == old else c for c in self.stats_cols
-                    )
-                    self.bloom_cols = tuple(
-                        new if c == old else c for c in self.bloom_cols
-                    )
-                    return base + 1
-            finally:
-                self._pending_schema = None
-                self._pending_column_mapping = None
-                if respec:
-                    self._allow_respec = False
-                    if not committed_ok:
-                        # a failed/raced rename must not leave the new
-                        # key as this instance's pending spec — a later
-                        # append would stamp a layout keyed on a column
-                        # the schema does not have (rebucket()'s
-                        # save-and-restore rule)
-                        if had_spec:
-                            self._pending_bucket_spec = saved_spec
-                        else:
-                            del self._pending_bucket_spec
-        raise CommitConflict(
-            f"rename_column lost the CAS race {max_retries} times"
-        )
-
-    def drop_column(self, name: str, max_retries: int = 10) -> int:
-        """``ALTER TABLE ... DROP COLUMN`` as ONE metadata-only commit:
-        the column leaves the logical schema and the mapping; no data
-        file is rewritten (old versions still read it — time travel
-        keeps per-manifest schemas). Requires column mapping: without
-        it, a later append re-adding the same name would RESURRECT the
-        old files' values; with it, a re-added name binds to a fresh
-        generated physical name and the orphaned physical data stays
-        invisible until the files are naturally rewritten. Refuses on
-        the bucket key (the declared layout would reference a dropped
-        column) and on constraint references."""
-        for _ in range(max_retries):
-            base = self.latest_version()
-            m = self.manifest(base)
-            mapping = m.get("column_mapping")
-            if not mapping:
-                raise ValueError(
-                    "drop_column requires column mapping — call "
-                    "enable_column_mapping() first (without the map, a "
-                    "re-added column name would resurrect old file data)"
-                )
-            schema = m.get("schema") or []
-            names = [n for n, _ in schema]
-            # case-insensitive lookup, matching Spark's resolution
-            folded = {n.casefold(): n for n in names}
-            if name.casefold() not in folded:
-                raise ValueError(f"no such column: {name!r}")
-            name = folded[name.casefold()]  # bind to committed casing
-            if len(names) == 1:
-                raise ValueError("cannot drop the table's only column")
-            spec = m.get("bucket_spec")
-            if spec is not None and spec.get("col") == name:
-                raise ValueError(
-                    f"cannot drop bucket key {name!r} — rebucket() to "
-                    "another key first"
-                )
-            for cname, expr in (m.get("constraints") or {}).items():
-                if self._metadata_mentions(expr, name):
-                    raise ValueError(
-                        f"cannot drop {name!r}: constraint {cname!r} "
-                        f"({expr}) references it"
-                    )
-            self._pending_schema = [
-                [n, t] for n, t in schema if n != name
-            ]
-            self._pending_column_mapping = {
-                k: v for k, v in mapping.items() if k != name
-            }
-            # tombstone the physical name: it still exists inside live
-            # data files, so no future column may ever rebind to it
-            self._pending_cm_burned = sorted(
-                set(m.get("column_mapping_burned") or ())
-                | {mapping[name]}
-            )
-            try:
-                if self._try_commit(base, m["files"], "metadata"):
-                    return base + 1
-            finally:
-                self._pending_schema = None
-                self._pending_column_mapping = None
-                self._pending_cm_burned = None
-        raise CommitConflict(
-            f"drop_column lost the CAS race {max_retries} times"
         )
 
     def delete_where(
@@ -2241,7 +1745,7 @@ class SnapshotStore:
         touched = sorted(per_file)
         token = uuid.uuid4().hex[:12]
         chg_dir = os.path.join(self._data_dir, f"commit-{token}-chg")
-        self._to_physical(matches.drop("_f"), m).write.parquet(chg_dir)
+        matches.drop("_f").write.parquet(chg_dir)
         chg_rel = sorted(
             os.path.relpath(f, self.path)
             for f in glob.glob(os.path.join(chg_dir, "*.parquet"))
@@ -2299,12 +1803,10 @@ class SnapshotStore:
         cond = F.expr(condition) if isinstance(condition, str) else condition
         cond = F.coalesce(cond, F.lit(False))
         # the ONE commit path that never runs _stage: neutralize any
-        # schema/mapping pendings a FAILED earlier stage left on this
-        # instance (the add_constraint rule) — a lost evolving append
-        # must not stamp its schema through a DV delete
+        # schema pending a FAILED earlier stage left on this instance
+        # (the add_constraint rule) — a lost evolving append must not
+        # stamp its schema through a DV delete
         self._pending_schema = None
-        self._pending_column_mapping = None
-        self._pending_cm_burned = None
         base = self.latest_version()
         m = self.manifest(base)
         if not m["files"]:
@@ -2341,9 +1843,7 @@ class SnapshotStore:
         token = uuid.uuid4().hex[:12]
         # -1 change feed rows (same contract as the CoW delete)
         chg_dir = os.path.join(self._data_dir, f"commit-{token}-chg")
-        self._to_physical(matches.drop("_file", "_pos"), m).write.parquet(
-            chg_dir
-        )
+        matches.drop("_file", "_pos").write.parquet(chg_dir)
         chg_rel = sorted(
             os.path.relpath(f, self.path)
             for f in glob.glob(os.path.join(chg_dir, "*.parquet"))
@@ -2544,39 +2044,6 @@ class SnapshotStore:
                     {c: (b[f"lo_{c}"], b[f"hi_{c}"]) for c in prune_cols},
                     version=base,
                 )
-        # bloom refinement for point-key trickle upserts: scattered
-        # keys defeat range pruning (every file's min/max spans them);
-        # with a single bloom'd join key and a BOUNDED key set, drop
-        # candidate files whose bloom rejects every source key
-        if cand and len(on) == 1 and on[0] in self.bloom_cols:
-            kvals = [
-                r[0]
-                for r in source.select(on[0]).distinct().limit(1025).collect()
-            ]
-            if 0 < len(kvals) <= 1024:
-                import base64
-                import zlib
-
-                stats = m.get("stats", {})
-                key_phys = (m.get("column_mapping") or {}).get(
-                    on[0], on[0]
-                )
-                kept = []
-                for f in cand:
-                    bl = stats.get(f, {}).get("_bloom", {}).get(key_phys)
-                    if bl is None:
-                        kept.append(f)
-                        continue
-                    buf = zlib.decompress(base64.b64decode(bl["b"]))
-                    if any(
-                        all(
-                            buf[i >> 3] & (1 << (i & 7))
-                            for i in _bloom_positions(v, bl["m"], bl["k"])
-                        )
-                        for v in kvals
-                    ):
-                        kept.append(f)
-                cand = kept
         # delete-by-absence reads EVERY file anyway (non-matched rows
         # live in essentially all of them — O(table) is the operation's
         # inherent cost, same as Delta's), so both sides derive from
@@ -2671,7 +2138,7 @@ class SnapshotStore:
         if minus is not None:
             token = uuid.uuid4().hex[:12]
             d = os.path.join(self._data_dir, f"commit-{token}-chg")
-            self._to_physical(minus, m).write.parquet(d)
+            minus.write.parquet(d)
             chg_rel = sorted(
                 os.path.relpath(f, self.path)
                 for f in glob.glob(os.path.join(d, "*.parquet"))
@@ -2712,7 +2179,7 @@ class SnapshotStore:
                     allow_schema_change=evolving,
                 )
         # _stage REASSIGNS _pending_stats; a second call in the same
-        # commit must not drop the first call's stats/blooms or the
+        # commit must not drop the first call's stats or the
         # survivor files lose manifest pruning for good
         survivor_stats = dict(getattr(self, "_pending_stats", {})) if staged else {}
         add_staged: list[str] = []
@@ -3091,18 +2558,11 @@ class SnapshotStore:
                 f"files were vacuumed (e.g. {missing[0]})"
             )
         # the commit must re-carry the target's metadata: schema (a
-        # later evolution may need reverting), per-file stats/blooms
+        # later evolution may need reverting), per-file stats
         # (re-added files would otherwise lose manifest pruning), and
         # deletion vectors (re-added files keep their logical deletes)
         self._pending_schema = target.get("schema")
         self._pending_stats = dict(target.get("stats", {}))
-        # {} = explicitly clear when the target predates column
-        # mapping (its files carry the then-logical names; identity
-        # reads them correctly)
-        self._pending_column_mapping = target.get("column_mapping") or {}
-        self._pending_cm_burned = (
-            target.get("column_mapping_burned") or []
-        )
         try:
             # NO rebase: a restore racing ANY concurrent commit must
             # conflict — blindly retrying onto the new head would
@@ -3121,8 +2581,6 @@ class SnapshotStore:
         finally:
             del self._pending_schema
             del self._pending_stats
-            del self._pending_column_mapping
-            del self._pending_cm_burned
         raise CommitConflict(
             "restore lost the CAS race — the table changed concurrently; "
             "re-read the head and decide whether the restore still applies"

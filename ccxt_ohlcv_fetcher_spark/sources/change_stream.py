@@ -39,6 +39,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ccxt_ohlcv_fetcher_spark.operators.snapshots import READER_VERSION
+
 _EXTRA_DDL = "_change int, _commit_version int"
 
 
@@ -117,31 +119,26 @@ def _starting_version_at_timestamp(root: str, ts: float) -> int:
         raise
 
 
-def _head_meta(root: str, head: int) -> tuple[list, dict, int]:
-    """The head snapshot's (schema pairs, column mapping, min_reader):
-    walk back from ``head`` until each key's most recent SETTING —
-    format-2 deltas record them on change only — or a checkpoint file
-    (full state, json or parquet) or a legacy full manifest (its own
-    checkpoint, predating all three keys). Bounded by the store's
-    checkpoint cadence. The mapping matters here because change/data
-    files under column mapping store PHYSICAL names — reading them by
-    logical name would silently null-fill every renamed column; the
-    protocol floor matters because this reader must REFUSE features it
-    does not implement rather than misread them."""
+def _head_meta(root: str, head: int) -> tuple[list, int]:
+    """The head snapshot's (schema pairs, min_reader): walk back from
+    ``head`` until each key's most recent SETTING — format-2 deltas
+    record them on change only — or a checkpoint file (full state,
+    json or parquet) or a legacy full manifest (its own checkpoint,
+    predating both keys). Bounded by the store's checkpoint cadence.
+    The protocol floor matters because this reader must REFUSE
+    features it does not implement rather than misread them."""
     _unset = object()
-    schema, mapping, floor = _unset, _unset, _unset
+    schema, floor = _unset, _unset
 
     def _take(doc: dict, terminal: bool) -> None:
-        nonlocal schema, mapping, floor
+        nonlocal schema, floor
         if schema is _unset and ("schema" in doc or terminal):
             schema = [tuple(p) for p in (doc.get("schema") or [])]
-        if mapping is _unset and ("column_mapping" in doc or terminal):
-            mapping = doc.get("column_mapping") or {}
         if floor is _unset and ("min_reader" in doc or terminal):
             floor = doc.get("min_reader") or 2
 
     v = head
-    while v > 0 and _unset in (schema, mapping, floor):
+    while v > 0 and _unset in (schema, floor):
         ckj = os.path.join(root, "_manifests", f"ckpt-v{v:08d}.json")
         ckp = os.path.join(root, "_manifests", f"ckpt-v{v:08d}.parquet")
         if os.path.exists(ckj):
@@ -160,7 +157,6 @@ def _head_meta(root: str, head: int) -> tuple[list, dict, int]:
         v -= 1
     return (
         [] if schema is _unset else schema,
-        {} if mapping is _unset else mapping,
         2 if floor is _unset else floor,
     )
 
@@ -201,20 +197,17 @@ class SnapshotChangeStreamReader(DataSourceStreamReader):
         # pin the HEAD schema (the evolution superset): files written
         # before an add-column evolution null-fill; pinning an older
         # version's schema would silently drop evolved columns. The
-        # head's column mapping rides along (files store PHYSICAL
-        # names), and the protocol floor is checked — refuse, never
-        # misread.
+        # protocol floor is checked against the snapshot reader's —
+        # refuse, never misread.
+        self.schema_pairs = []
         if head:
-            self.schema_pairs, self.column_mapping, floor = _head_meta(
-                self.root, head
-            )
-            if floor > 3:
+            self.schema_pairs, floor = _head_meta(self.root, head)
+            if floor > READER_VERSION:
                 raise RuntimeError(
                     f"table at {self.root!r} requires reader protocol "
-                    f"{floor}; snapshot_changes implements 3"
+                    f"{floor}; snapshot_changes implements "
+                    f"{READER_VERSION}"
                 )
-        else:
-            self.schema_pairs, self.column_mapping = [], {}
 
     # --- offsets ----------------------------------------------------------
 
@@ -324,10 +317,8 @@ class SnapshotChangeStreamReader(DataSourceStreamReader):
         cols = []
         n = table.num_rows
         for name, _typ in self.schema_pairs:
-            # files store PHYSICAL column names under column mapping
-            phys = self.column_mapping.get(name, name)
-            if phys in table.column_names:
-                cols.append(table.column(phys).to_pylist())
+            if name in table.column_names:
+                cols.append(table.column(name).to_pylist())
             else:
                 cols.append([None] * n)  # pre-evolution file: null-fill
         sign = [partition.sign] * n

@@ -590,49 +590,3 @@ def test_view_dir_refuses_duplicate_basenames(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(store, "manifest", lambda version=None: fake)
     with pytest.raises(ValueError, match="duplicate basenames"):
         store._view_dir(fake["version"])
-
-
-def test_dv_zero_shuffle_read_composes_with_column_mapping(spark, tmp_path):
-    """VERDICT r11 item 6: DV-aware zero-exchange reads (5547003) and
-    column mapping (c5be45e) must COMPOSE — rename both a bucket-
-    adjacent column and the bucket key itself on a logged bucketed
-    table carrying deletion vectors, and the bucketed read must still
-    plan zero shuffle exchanges on the (renamed) key while matching
-    the generic snapshot read's values exactly."""
-    from pyspark.sql import functions as F
-
-    from ccxt_ohlcv_fetcher_spark.operators.bucketed_log import (
-        BucketedSnapshotStore,
-    )
-
-    st = BucketedSnapshotStore(
-        spark, str(tmp_path / "b"), bucket_col="k", n_buckets=4
-    )
-    st.append(
-        spark.range(100).select(
-            (F.col("id") % 10).alias("k"),
-            F.col("id").alias("v"),
-            (F.col("id") * 2).alias("w"),
-        )
-    )
-    st.enable_column_mapping()
-    st.rename_column("w", "weight")       # bucket-adjacent rename
-    v, n = st.delete_where_dv("v % 7 = 0")
-    assert n == 15
-    st.rename_column("k", "key")          # bucket-KEY rename, after DVs
-    st.delete_where_dv("v = 1")           # DVs accumulate post-rename
-    b = st.read_bucketed()
-    assert b.columns == ["key", "v", "weight"]
-    generic = st.read()
-    assert sorted(map(tuple, b.collect())) == sorted(
-        map(tuple, generic.collect())
-    )
-    assert b.count() == 84
-    agg = b.groupBy("key").agg(
-        F.sum("v").alias("s"), F.sum("weight").alias("sw")
-    )
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan, plan
-    # time travel: pre-rename versions read the OLD names, snapshot-exact
-    old = st.read_bucketed(version=2)  # post-enable, pre-renames/DVs
-    assert old.columns == ["k", "v", "w"] and old.count() == 100

@@ -419,27 +419,6 @@ def test_compact_auto_fragmentation_trigger(spark, ds):
     assert ds.compact(when_files_per_key_above=2) is None
 
 
-def test_retention_neutralizes_stale_pending_mapping(spark, ds):
-    """ADVICE r11: a FAILED evolving append can leave a stale
-    _pending_column_mapping (with fresh uncommitted physical names)
-    on the store instance; a later retention commit must NOT stamp it
-    into the manifest — retention is metadata-only over files, like
-    add_constraint."""
-    ds.append_idempotent(batch(spark, 0, 5))
-    ds.append_idempotent(batch(spark, 5, 9))
-    ds.store._pending_column_mapping = {"timestamp": "col-deadbeef"}
-    ds.store._pending_cm_burned = ["col-cafebabe"]
-    assert ds.retention(older_than_ms=T0 + 5 * MIN) >= 1
-    m = ds.store.manifest()
-    assert not m.get("column_mapping")
-    assert not m.get("column_mapping_burned")
-    assert ds.read().count() == 4
-
-
-# Spark jobs of one poll cycle on a compacted table: resume offset, one
-# page through the idempotent append, and a tail read. Today's count; a
-# change that lowers it lowers this ceiling, one that raises it must say
-# why in CHANGES.md.
 POLL_CYCLE_JOB_CEILING = 9
 
 

@@ -390,49 +390,6 @@ def test_drain_available_converges_capped_stream(spark, tmp_path):
     )
 
 
-def test_stream_reads_physical_names_under_column_mapping(spark, tmp_path):
-    """Column mapping (round 11): data and change files store PHYSICAL
-    column names; the stream must resolve the head's logical schema
-    through the mapping or every renamed column silently null-fills.
-    Covers a rename, a post-rename append, a CoW delete's change
-    files, and a generated-physical-name evolved column."""
-    register(spark)
-    root = str(tmp_path / "t")
-    store = SnapshotStore(spark, root)
-    store.append(_df(spark, 0, 10))            # v1: +10 (pre-mapping files)
-    store.enable_column_mapping()              # v2: metadata
-    store.rename_column("v", "val")            # v3: metadata
-    store.append(                              # v4: +5 (physical 'v' files)
-        spark.range(100, 105).select(
-            (F.col("id") % 5).alias("k"), F.col("id").alias("val")
-        )
-    )
-    store.append(                              # v5: evolved column, fresh
-        spark.range(200, 202).select(          #     generated physical name
-            (F.col("id") % 5).alias("k"),
-            F.col("id").alias("val"),
-            F.lit("t").alias("tag"),
-        ),
-        merge_schema=True,
-    )
-    store.delete_where("val >= 200")           # v6: -2 via change files
-
-    q = _start(spark, root, "chg_cm", str(tmp_path / "cp"))
-    q.awaitTermination(300)
-    rows = spark.sql("select * from chg_cm").collect()
-    plus = [r for r in rows if r["_change"] == 1]
-    minus = [r for r in rows if r["_change"] == -1]
-    assert len(plus) == 17 and len(minus) == 2
-    # values actually materialize (the bug mode was all-NULL)
-    assert sorted(r["val"] for r in plus) == sorted(
-        list(range(10)) + list(range(100, 105)) + [200, 201]
-    )
-    assert sorted(r["val"] for r in minus) == [200, 201]
-    assert {r["tag"] for r in plus if r["val"] >= 200} == {"t"}
-    # pre-evolution rows null-fill the evolved column
-    assert all(r["tag"] is None for r in plus if r["val"] < 200)
-
-
 def test_starting_timestamp_option(spark, tmp_path):
     """startingTimestamp (TIMESTAMP AS OF for the feed): the stream
     emits changes AFTER the newest commit at or before the instant;

@@ -5,9 +5,20 @@ bytes under Z-order than under single-column clustering.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from ccxt_ohlcv_fetcher_spark.operators.layout import zorder_value
+from tests.conftest import SF_DIR
+
+#: Scale of the events fixture the box-query measurement reads, beside
+#: the suite's own fixture under the same testdata root. It needs
+#: sf0.01 (10,000 events): at sf0.001 (1,000 events, about 16 rows in
+#: each of the 64 files) per-file parquet overhead dominates, and the
+#: two layouts' total bytes differ by 40% (10.7 vs 17.9 KB), so they
+#: no longer have comparable geometry.
+ZORDER_SF = "sf0.01"
 
 
 def _morton2(x: int, y: int, bits: int) -> int:
@@ -73,9 +84,9 @@ def test_zorder_rowgroup_bytes_read_measured(spark, tmp_path):
     why the measurement aggregates a grid of boxes."""
     import numpy as np
 
-    events = spark.read.parquet("/root/testdata/sf0.01/events.parquet").select(
-        "event_id", "user_id", "value"
-    )
+    events = spark.read.parquet(
+        os.path.join(os.path.dirname(SF_DIR), ZORDER_SF, "events.parquet")
+    ).select("event_id", "user_id", "value")
 
     linear = str(tmp_path / "linear")
     (

@@ -178,14 +178,13 @@ def test_change_stream_reads_delta_manifests(spark, tmp_path):
 
 
 def _rich_store(spark, tmp_path, fmt):
-    """A store exercising every checkpointed state facet: stats +
-    blooms, DVs, constraints, txn watermarks, a merge (changes/added
+    """A store exercising every checkpointed state facet: stats,
+    DVs, constraints, txn watermarks, a merge (changes/added
     annotations), pushed past the interval so checkpoints land."""
     store = SnapshotStore(
         spark,
         str(tmp_path / f"t_{fmt}"),
         stats_cols=["v"],
-        bloom_cols=["v"],
         checkpoint_interval=5,
         checkpoint_format=fmt,
     )
@@ -205,7 +204,7 @@ def test_parquet_checkpoint_state_equals_delta_replay(spark, tmp_path):
     """Every version's state reconstructed THROUGH a parquet checkpoint
     must equal the state from pure delta replay (the shared,
     format-agnostic ground truth) — over a log exercising stats,
-    blooms, DVs, constraints, txn watermarks, and a merge's
+    DVs, constraints, txn watermarks, and a merge's
     changes/added annotations."""
     sp = _rich_store(spark, tmp_path, "parquet")
     head = sp.latest_version()

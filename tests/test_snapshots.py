@@ -627,81 +627,6 @@ def test_merge_schema_evolution_add_column(spark, tmp_path):
     assert store.read().count() == 9
 
 
-def test_bloom_file_skipping_point_lookups(spark, tmp_path):
-    """Per-file manifest Bloom filters: on SCATTERED keys (every
-    file's [min, max] spans every probe, so range pruning keeps all
-    files) the bloom keeps only files that actually contain the key —
-    and NEVER prunes a file that does contain it (no false
-    negatives, checked exhaustively)."""
-    from pyspark.sql import functions as F
-
-    store = SnapshotStore(
-        spark, str(tmp_path / "t"), stats_cols=["k"], bloom_cols=["k"]
-    )
-    # 4 single-file commits with interleaved keys: file i holds
-    # keys {i, i+40, i+80, ..., i+360} — min/max overlap fully
-    for i in range(4):
-        store.append(
-            spark.createDataFrame(
-                [(i + 40 * j,) for j in range(10)], "k long"
-            ).coalesce(1)
-        )
-    n_files = len(store.manifest()["files"])
-    assert n_files == 4
-    # range pruning alone keeps everything (overlapping min/max)
-    assert len(store.pruned_files({"k": (81, 81)})) == 4
-    # bloom pruning: exactness — every present key keeps its own file
-    hits = []
-    for i in range(4):
-        for j in range(10):
-            key = i + 40 * j
-            cand = store.pruned_files_eq("k", key)
-            owner = store.manifest(i + 1)["files"]
-            new = [f for f in owner if f not in
-                   (store.manifest(i)["files"] if i else [])]
-            assert set(new) <= set(cand)  # no false negatives, ever
-            hits.append(len(cand))
-    # and it actually prunes: most lookups touch ~1 of 4 files
-    assert sum(hits) / len(hits) < 2.0
-    # absent keys: near-total pruning (fpp only)
-    miss = [len(store.pruned_files_eq("k", 1000 + i)) for i in range(50)]
-    assert sum(miss) <= 10  # ~1-2% fpp * 4 files * 50 probes
-    # blooms survive carry-forward through an append commit
-    store.append(
-        spark.createDataFrame([(9999,)], "k long").coalesce(1)
-    )
-    assert len(store.pruned_files_eq("k", 9999)) <= 2
-    cand2 = store.pruned_files_eq("k", 81)
-    assert len(cand2) < 5 and any("commit" in f for f in cand2)
-
-
-def test_merge_bloom_refinement_on_scattered_keys(spark, tmp_path):
-    """Point-key upsert against scattered keys: range pruning keeps
-    every file (overlapping min/max), the bloom refinement narrows the
-    match scan to the files that actually contain the source keys —
-    and the merge result is still exact."""
-    from pyspark.sql import functions as F
-
-    store = SnapshotStore(
-        spark, str(tmp_path / "t"), stats_cols=["k"], bloom_cols=["k"]
-    )
-    for i in range(4):  # file i: keys i, i+40, ..., i+360 (interleaved)
-        store.append(
-            spark.createDataFrame(
-                [(i + 40 * j, i + 40 * j) for j in range(10)],
-                "k long, v long",
-            ).coalesce(1)
-        )
-    # upsert exactly two keys living in file 1 (k=41) and file 2 (k=82)
-    src = spark.createDataFrame([(41, -1), (82, -2)], "k long, v long")
-    r = store.merge_into(src, on=["k"])
-    assert (r["matched"], r["inserted"]) == (2, 0)
-    assert r["files_total"] == 4 and r["files_scanned"] <= 2
-    got = {row["k"]: row["v"] for row in store.read().collect()}
-    assert got[41] == -1 and got[82] == -2 and got[0] == 0
-    assert len(got) == 40
-
-
 def test_zorder_compact_prunes_2d_box_queries(spark, tmp_path):
     """compact(zorder_by=[a, b]): every output file covers a tight box
     in BOTH dimensions, so a 2-D box predicate prunes files from the
@@ -843,26 +768,6 @@ def test_append_merge_schema_type_widening(spark, tmp_path):
         )
     # time travel: the pre-widening version still reads NARROW
     assert dict(store.read(version=1).dtypes)["v"] == "int"
-
-
-def test_type_widening_under_column_mapping(spark, tmp_path):
-    """Widening composes with column mapping: the physical name (and
-    the stats key) is type-independent."""
-    from pyspark.sql import functions as F
-
-    store = SnapshotStore(spark, str(tmp_path / "t"), stats_cols=["v"])
-    store.append(spark.range(3).select(F.col("id").cast("int").alias("v")))
-    store.enable_column_mapping()
-    store.rename_column("v", "val")
-    store.append(
-        spark.range(3, 6).select(F.col("id").cast("bigint").alias("val")),
-        merge_schema=True,
-    )
-    m = store.manifest()
-    assert m["schema"] == [["val", "bigint"]]
-    assert m["column_mapping"] == {"val": "v"}
-    assert sorted(r["val"] for r in store.read().collect()) == list(range(6))
-    assert len(store.pruned_files({"val": (3, None)})) < len(m["files"])
 
 
 def test_merge_when_not_matched_by_source_delete(spark, tmp_path):
@@ -1184,7 +1089,7 @@ def test_dv_stats_drive_compaction_decision(spark, tmp_path):
 def test_merge_keeps_survivor_stats_in_manifest(spark, tmp_path):
     """ADVICE r6 (low): merge_into stages survivors then added rows in
     two _stage calls; the second reassigned _pending_stats, dropping
-    the survivor files' min/max stats and blooms from the manifest —
+    the survivor files' min/max stats from the manifest —
     those files then lost pruning forever. Every post-merge file must
     carry its stats entry."""
     from pyspark.sql import functions as F
@@ -1196,9 +1101,7 @@ def test_merge_keeps_survivor_stats_in_manifest(spark, tmp_path):
             .select(F.col("id").alias("k"), (F.col("id") * mult).alias("v"))
         )
 
-    store = SnapshotStore(
-        spark, str(tmp_path / "t"), stats_cols=["k"], bloom_cols=["k"]
-    )
+    store = SnapshotStore(spark, str(tmp_path / "t"), stats_cols=["k"])
     store.append(kv(0, 5))
     # matched key 3 forces a survivor rewrite; key 20 is an insert, so
     # BOTH _stage calls run in the same commit
@@ -1207,7 +1110,6 @@ def test_merge_keeps_survivor_stats_in_manifest(spark, tmp_path):
     m = store.manifest()
     for f in m["files"]:
         assert "k" in m["stats"][f], f"survivor file {f} lost min/max stats"
-        assert "_bloom" in m["stats"][f], f"survivor file {f} lost bloom"
     # and the stats are actually correct (prune to the survivor file)
     assert store.pruned_files({"k": (0, 2)}) and len(
         store.pruned_files({"k": (0, 2)})
@@ -1360,71 +1262,6 @@ def test_dv_delete_does_not_stamp_a_failed_stages_schema(spark, tmp_path):
     assert n == 1
     m = store.manifest()
     assert m["schema"] == [["v", "bigint"]]  # no phantom 'tag'
-    assert m.get("column_mapping") is None
-
-
-def test_overwrite_shrink_drops_dead_mapping_entries(spark, tmp_path):
-    """An overwrite that removes columns must not carry their mapping
-    entries forward: a later rename to the dead logical name would
-    bind two keys to one physical column (silent NULL reads)."""
-    from pyspark.sql import functions as F
-
-    store = SnapshotStore(spark, str(tmp_path / "t"))
-    store.append(
-        spark.range(3).select(
-            F.col("id").alias("x"), (F.col("id") * 2).alias("y")
-        )
-    )
-    store.enable_column_mapping()
-    store.overwrite(spark.range(3).select(F.col("id").alias("y")))
-    m = store.manifest()
-    assert m["column_mapping"] == {"y": "y"}  # x's entry is gone
-    # rename y -> x now binds cleanly (no dead-key collision)
-    store.rename_column("y", "x")
-    assert sorted(r["x"] for r in store.read().collect()) == [0, 1, 2]
-    m = store.manifest()
-    assert m["column_mapping"] == {"x": "y"}
-
-
-def test_failed_bucket_key_rename_restores_pending_spec(spark, tmp_path):
-    """A rename of the bucket key that fails must not leave the NEW
-    key as the instance's pending spec (a later append would stamp a
-    layout keyed on a column the schema lacks)."""
-    from pyspark.sql import functions as F
-
-    from ccxt_ohlcv_fetcher_spark.operators.bucketed_log import (
-        BucketedSnapshotStore,
-    )
-
-    st = BucketedSnapshotStore(
-        spark, str(tmp_path / "b"), bucket_col="k", n_buckets=4
-    )
-    st.append(
-        spark.range(8).select(
-            (F.col("id") % 4).alias("k"), F.col("id").alias("v")
-        )
-    )
-    st.enable_column_mapping()
-    # force every CAS attempt to lose AFTER the respec pendings are
-    # set — the window the restore protects
-    import ccxt_ohlcv_fetcher_spark.operators.snapshots as S
-
-    orig = S.SnapshotStore._try_commit
-    S.SnapshotStore._try_commit = lambda *a, **k: False
-    try:
-        with pytest.raises(CommitConflict):
-            st.rename_column("k", "key", max_retries=2)
-    finally:
-        S.SnapshotStore._try_commit = orig
-    assert st._pending_bucket_spec == {"col": "k", "n": 4}
-    assert st.bucket_col == "k"
-    # appends still commit under the committed layout
-    st.append(
-        spark.range(8, 12).select(
-            (F.col("id") % 4).alias("k"), F.col("id").alias("v")
-        )
-    )
-    assert st.manifest()["bucket_spec"] == {"col": "k", "n": 4}
 
 
 def test_merge_by_source_conflicts_on_concurrent_append(spark, tmp_path):
@@ -1468,56 +1305,6 @@ def test_merge_by_source_conflicts_on_concurrent_append(spark, tmp_path):
     assert sorted(r["k"] for r in store.read().collect()) == [
         0, 1, 2, 3, 10, 11,
     ]
-
-
-def test_constraint_guard_is_case_insensitive(spark, tmp_path):
-    """Spark resolves columns case-insensitively, so a constraint
-    written 'V >= 0' binds column v — the rename/drop guard must see
-    it."""
-    from pyspark.sql import functions as F
-
-    store = SnapshotStore(spark, str(tmp_path / "t"))
-    store.append(
-        spark.range(5).select(
-            F.col("id").alias("v"), (F.col("id") * 2).alias("w2")
-        )
-    )
-    store.enable_column_mapping()
-    store.add_constraint("up", "V >= 0")
-    with pytest.raises(ValueError, match="constraint"):
-        store.rename_column("v", "w")
-    with pytest.raises(ValueError, match="constraint"):
-        store.drop_column("v")
-
-
-def test_rename_rebinds_instance_stats_and_bloom_cols(spark, tmp_path):
-    """After renaming a stats/bloom column, THIS instance's config
-    follows: files staged afterwards keep recording that column's
-    stats under the (stable) physical key."""
-    from pyspark.sql import functions as F
-
-    store = SnapshotStore(
-        spark, str(tmp_path / "t"), stats_cols=["a"], bloom_cols=["a"]
-    )
-    store.append(
-        spark.range(5)
-        .select(F.col("id").alias("a"), (F.col("id") * 2).alias("b"))
-        .coalesce(1)
-    )
-    store.enable_column_mapping()
-    store.rename_column("a", "alpha")
-    assert store.stats_cols == ("alpha",)
-    assert store.bloom_cols == ("alpha",)
-    store.append(
-        spark.range(100, 105)
-        .select(F.col("id").alias("alpha"), (F.col("id") * 2).alias("b"))
-        .coalesce(1)
-    )
-    m = store.manifest()
-    newest = m["files"][-1]
-    entry = dict(m["stats"])[newest]
-    assert "a" in entry and "_bloom" in entry  # physical key, recorded
-    assert len(store.pruned_files({"alpha": (100, None)})) == 1
 
 
 def test_merge_schema_evolution_type_widening(spark, tmp_path):
@@ -1610,3 +1397,129 @@ def test_merge_widening_refuses_bucket_key(spark, tmp_path):
             on=["k"],
             schema_evolution=True,
         )
+
+
+def test_tables_with_column_mapping_are_refused(spark, tmp_path):
+    """Tables written by an older engine with column mapping turned on
+    carry ``column_mapping`` and ``min_reader: 3`` in their log, and
+    their data files may store generated physical column names. This
+    reader reads files by their logical names only, so it must refuse
+    such a table loudly on every read path — the plain read, the
+    bucketed read and the change feed — never return NULL-filled
+    columns."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from ccxt_ohlcv_fetcher_spark.operators.bucketed_log import (
+        BucketedSnapshotStore,
+    )
+    from ccxt_ohlcv_fetcher_spark.sources.change_stream import register
+
+    def enable_mapping_by_hand(store):
+        # the metadata-only delta an older engine's enable step commits
+        head = store.latest_version()
+        delta = {
+            "format": 2, "version": head + 1, "parent": head,
+            "operation": "metadata", "add": [], "remove": [],
+            "column_mapping": {
+                n: n for n, _t in store.manifest(head)["schema"]
+            },
+            "min_reader": 3,
+            "ts": store.manifest(head)["ts"] + 1.0,
+        }
+        with open(store._manifest_path(head + 1), "w") as fh:
+            json.dump(delta, fh)
+
+    plain = SnapshotStore(spark, str(tmp_path / "plain"))
+    plain.append(_df(spark, 0, 5))
+    enable_mapping_by_hand(plain)
+    with pytest.raises(RuntimeError, match="requires reader protocol"):
+        SnapshotStore(spark, plain.path).read()
+
+    bkt = BucketedSnapshotStore(
+        spark, str(tmp_path / "bkt"), bucket_col="k", n_buckets=2
+    )
+    bkt.append(
+        spark.range(8).select(
+            (F.col("id") % 4).alias("k"), F.col("id").alias("v")
+        )
+    )
+    enable_mapping_by_hand(bkt)
+    # the instance opened before the mapping commit: the refusal comes
+    # from read_bucketed's own head resolution, not the constructor
+    with pytest.raises(RuntimeError, match="requires reader protocol"):
+        bkt.read_bucketed()
+
+    register(spark)
+    with pytest.raises(Exception, match="requires reader protocol"):
+        q = (
+            spark.readStream.format("snapshot_changes")
+            .option("path", plain.path)
+            .load()
+            .writeStream.format("memory")
+            .queryName("mapped_refused")
+            .option("checkpointLocation", str(tmp_path / "cp"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+
+def test_min_reader_protocol_floor(spark, tmp_path):
+    """A manifest demanding a protocol newer than this reader
+    implements is refused LOUDLY (a reader that misses a feature it
+    does not know would silently misread the table)."""
+    import json
+
+    from ccxt_ohlcv_fetcher_spark.operators import snapshots as S
+
+    st = SnapshotStore(spark, str(tmp_path / "tbl"))
+    st.append(_df(spark, 0, 5))
+    assert st.manifest().get("min_reader") is None
+    head = st.latest_version()
+    delta = {
+        "format": 2, "version": head + 1, "parent": head,
+        "operation": "metadata", "add": [], "remove": [],
+        "min_reader": S.READER_VERSION + 1,
+    }
+    with open(st._manifest_path(head + 1), "w") as fh:
+        json.dump(delta, fh)
+    fresh = SnapshotStore(spark, st.path)
+    with pytest.raises(RuntimeError, match="requires reader protocol"):
+        fresh.read()
+    os.remove(st._manifest_path(head + 1))
+
+
+def test_timestamp_time_travel(spark, tmp_path):
+    """version_at_timestamp / read(timestamp=): commit stamps are
+    monotonic per log, pre-stamp manifests fall back to file mtime,
+    and a too-early timestamp refuses."""
+    st = SnapshotStore(spark, str(tmp_path / "tbl"))
+    st.append(_df(spark, 0, 5))
+    t1 = st.manifest(1)["ts"]
+    st.append(_df(spark, 5, 8))
+    t2 = st.manifest(2)["ts"]
+    assert t2 > t1
+    assert st.version_at_timestamp(t1) == 1
+    assert st.version_at_timestamp((t1 + t2) / 2) == 1
+    assert st.version_at_timestamp(t2) == 2
+    assert st.version_at_timestamp(t2 + 3600) == 2
+    assert st.read(timestamp=t1).count() == 5
+    assert st.read(timestamp=t2 + 1).count() == 8
+    with pytest.raises(ValueError, match="predates"):
+        st.version_at_timestamp(t1 - 1)
+    with pytest.raises(ValueError, match="not both"):
+        st.read(version=1, timestamp=t1)
+    # legacy manifests without the stamp: mtime fallback
+    import json
+
+    p = st._manifest_path(1)
+    with open(p) as fh:
+        m = json.load(fh)
+    m.pop("ts")
+    with open(p, "w") as fh:
+        json.dump(m, fh)
+    st._state_cache.clear()
+    assert st.version_at_timestamp(t2 + 3600) == 2
+    assert st.version_at_timestamp(t2) in (1, 2)  # mtime >= t2 is fine
